@@ -87,6 +87,35 @@ DRIVER_WINDOW = 50
 #   [fill]  the ENTIRE remaining 33-query r9-evidence block, then the
 #           r10 head (6) — after this window no query's latest driver
 #           evidence predates r10 (the VERDICT r14 #4 "Done" bar).
+# Driver-window head for the per-call spark.sql binding: the 22 queries
+# whose code it touched (the touched set printed by `python
+# scripts/plan_window.py --tuple` — the 21 spark.sql operators and
+# join_interval_chunked). The rotation fill is left out, so the rest of
+# the window keeps its prior order.
+_SQL_BINDING_PRIORITY = (
+    "sql_q10_returned_items",
+    "sql_q18_large_customers",
+    "sql_q21_sole_blame",
+    "sql_q3_shipping_priority",
+    "sql_q6_forecast_revenue",
+    "sql_q7_volume_shipping",
+    "sql_q22_dormant_value",
+    "join_interval_chunked",
+    "sql_exists_subquery",
+    "sql_scalar_subquery",
+    "sql_q8_market_share",
+    "sql_q14_promo_effect",
+    "sql_q2_min_cost_supplier",
+    "sql_q9_product_profit",
+    "sql_q11_important_parts",
+    "sql_q12_ship_latency",
+    "sql_q13_order_distribution",
+    "sql_q15_top_supplier",
+    "sql_q16_supplier_part_counts",
+    "sql_q19_disjunctive_ranges",
+    "sql_q20_promo_concentration",
+    "sql_q5_local_supplier_volume",
+)
 # Round-16 driver-window priority (generated by
 # `python scripts/plan_window.py --tuple` at HEAD; the rotation test
 # enforces that every query whose backing code this optimization round
@@ -945,14 +974,15 @@ def all_queries() -> dict[str, QuerySpec]:
     """Import every operator module (side effect: registration) and return
     the full registry, reordered so the driver's 50-query correctness
     window covers refactor-touched and oldest-verified operators first
-    (see _ROUND16_PRIORITY; the earlier round tuples are the stable
-    tail). Keys are the SURVEY.md §2 operator IDs."""
+    (see _SQL_BINDING_PRIORITY and _ROUND16_PRIORITY; the earlier round
+    tuples are the stable tail). Keys are the SURVEY.md §2 operator IDs."""
     import importlib
 
     for mod in _OPERATOR_MODULES:
         importlib.import_module(mod)
     ordered: dict[str, QuerySpec] = {}
     for name in (
+        *_SQL_BINDING_PRIORITY,
         *_ROUND16_PRIORITY,
         *_ROUND15_PRIORITY,
         *_ROUND14_PRIORITY,

@@ -14,6 +14,8 @@ repair (FIXTURES.md "events") is applied exactly once, in one place:
 
 from __future__ import annotations
 
+import string
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,7 +66,17 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load(spark, sf_dir, name) for name in TABLES}
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture as a temp view for ``spark.sql`` callers."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
+def fixture_sql(spark: SparkSession, sf_dir: str, text: str, **fragments: str) -> DataFrame:
+    """``spark.sql(text)`` with its inputs bound per call, not by name.
+
+    Every ``{table}`` placeholder in ``text`` is :func:`load`-ed from
+    ``sf_dir`` and passed to ``spark.sql`` as a DataFrame kwarg; Spark
+    gives each one a uniquely named temp view for this statement's
+    analysis and drops it afterwards, so no session state outlives the
+    call and another ``sf_dir`` in the same session can never resolve to
+    these tables. A table named twice is loaded and registered once.
+    ``fragments`` are SQL text (sum builders, type keywords) spliced in
+    first, because ``spark.sql`` quotes a ``str`` kwarg as a literal."""
+    tables = sorted({f for _, f, _, _ in string.Formatter().parse(text) if f} - fragments.keys())
+    text = text.format(**fragments, **{t: "{" + t + "}" for t in tables})
+    return spark.sql(text, **{t: load(spark, sf_dir, t) for t in tables})

@@ -54,8 +54,9 @@ _INDEX_BYTE_BUDGET = 256 << 20
 # (i <= j) exactly once via a cogrouped applyInPandas, and run THE SAME
 # bit-exact per-dimension fold the broadcast kernel runs — so both routes
 # return bit-identical rows and the Arrow path has no size ceiling.
-# Shuffle cost is (L+1)× the relation (each row visits L+1 block pairs),
-# the unavoidable replication of an exact all-pairs comparison.
+# Shuffle cost is L× the relation (each row visits the L block pairs that
+# contain its block, the diagonal included), the unavoidable replication
+# of an exact all-pairs comparison.
 _BLOCK_TARGET_BYTES = 64 << 20
 # Per-chunk cap on the m×n float64 product block any kernel materializes
 # (ADVICE r15: a 10k-row Arrow batch against a near-budget broadcast matrix

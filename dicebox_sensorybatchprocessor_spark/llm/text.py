@@ -476,32 +476,6 @@ def _text_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _verify_containment(cand, arrs, "doc_id", 0.8)
 
 
-def _text_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r16 occurrence-level shingle self-join form of
-    :func:`text_containment` (same shingle-join shape as the pre-r15
-    dedup_ngram_jaccard). No longer on any route — kept as the
-    brute-force reference the prefix-filter property test audits
-    against."""
-    from dicebox_sensorybatchprocessor_spark.llm.dedup import _shingles
-
-    sh = _shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    containment = F.col("n_common") * 1.0 / F.least(F.col("sa.n"), F.col("sb.n"))
-    return (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(containment >= 0.8)
-        .select("doc_a", "doc_b", "n_common", F.round(containment, 6).alias("containment"))
-    )
-
-
 @register(
     "text_canonicalize",
     oracle="""

@@ -428,7 +428,7 @@ def join_interval_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact overlap length is integer µs arithmetic, identical on both
     engines; the oracle runs the naive theta-join."""
     _HALF_H = 1_800_000_000  # 30 min in µs
-    _CHUNK = 3_600_000_000  # 1 h grid
+    _GRID = 3_600_000_000  # 1 h chunk grid in µs
     ev = load(spark, sf_dir, "events")
     start = F.unix_micros(F.col("ts").cast("timestamp"))
 
@@ -445,8 +445,8 @@ def join_interval_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "chunk",
                 F.explode(
                     F.sequence(
-                        (F.col(s) / _CHUNK).cast("bigint"),
-                        (F.col(e) / _CHUNK).cast("bigint"),
+                        (F.col(s) / _GRID).cast("bigint"),
+                        (F.col(e) / _GRID).cast("bigint"),
                     )
                 ),
             )

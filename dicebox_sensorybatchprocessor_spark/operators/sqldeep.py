@@ -23,7 +23,12 @@ and latency classes derive from ``l_shipdate - o_orderdate``:
 - Q21 → EXISTS + NOT EXISTS double correlation on the same fact
 - Q22 → scalar-subquery threshold + anti-join (NOT EXISTS) rollup
 
-All money sums use the hi/lo fixed-point decomposition
+Each query body is one template for both engines: ``{table}``
+placeholders become the plain table names in the DuckDB oracle and, on
+the Spark side, DataFrames bound per call by :func:`io.fixture_sql`
+(only the tables the body names, loaded from the call's ``sf_dir``; no
+view outlives the call). Fragments such as ``{rev}`` and ``{ts}`` are
+spliced as SQL text. All money sums come from the one exact-sum builder
 (utils.fixed_point_sum_sql_spark ≡ DuckDB HUGEINT sums) so every query
 value-hash-matches the oracle exactly; quantity sums are integral doubles
 (exact under IEEE754 well past 2^53, order-independent).
@@ -40,7 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dicebox_sensorybatchprocessor_spark.operators.sqlapi import _ensure_views
+from dicebox_sensorybatchprocessor_spark.io import fixture_sql
 from dicebox_sensorybatchprocessor_spark.registry import register
 from dicebox_sensorybatchprocessor_spark.utils import (
     fixed_point_sum_sql,
@@ -48,11 +53,6 @@ from dicebox_sensorybatchprocessor_spark.utils import (
 )
 
 _REV = "l.l_extendedprice * (1 - l.l_discount)"
-
-
-def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    _ensure_views(spark, sf_dir)
-    return spark.sql(text)
 
 
 # --- Q2: min-cost supplier (correlated scalar-min subquery) ---------------
@@ -77,8 +77,7 @@ WHERE p.p_type = 'ECONOMY' AND p.p_size BETWEEN 10 AND 20
 ORDER BY p.p_partkey, s.s_name
 """
 
-_SPARK_T = {t: f"sbp_{t}" for t in ("part", "lineitem", "supplier", "nation", "region", "orders", "customer")}
-_DUCK_T = {t: t for t in _SPARK_T}
+_DUCK_T = {t: t for t in ("part", "lineitem", "supplier", "nation", "region", "orders", "customer")}
 
 
 @register("sql_q2_min_cost_supplier", oracle=_Q2_BODY.format(**_DUCK_T))
@@ -89,7 +88,7 @@ def sql_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelates the min into a per-part aggregate joined back on
     p_partkey; unit_cost is the identical IEEE division on both engines,
     so the float equality is exact."""
-    return _sql(spark, sf_dir, _Q2_BODY.format(**_SPARK_T))
+    return fixture_sql(spark, sf_dir, _Q2_BODY)
 
 
 # --- Q9: product-type profit by nation × year -----------------------------
@@ -118,8 +117,8 @@ def sql_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the missing ps_supplycost) per supplier nation per order year, for
     parts matching a name pattern. Two fact tables and three dims in one
     join tree; the p_name LIKE filter prunes part before the join."""
-    return _sql(
-        spark, sf_dir, _Q9_BODY.format(profit_sum=fixed_point_sum_sql_spark(_Q9_PROFIT, 4), **_SPARK_T)
+    return fixture_sql(
+        spark, sf_dir, _Q9_BODY, profit_sum=fixed_point_sum_sql_spark(_Q9_PROFIT, 4)
     )
 
 
@@ -156,15 +155,8 @@ def sql_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncorrelated scalar subquery re-aggregates the same filtered join.
     The threshold multiply happens on the exact fixed-point total, so the
     HAVING cut is deterministic across engines."""
-    return _sql(
-        spark,
-        sf_dir,
-        _Q11_BODY.format(
-            val=fixed_point_sum_sql_spark("l.l_extendedprice", 2),
-            val_total=fixed_point_sum_sql_spark("l.l_extendedprice", 2),
-            **_SPARK_T,
-        ),
-    )
+    val = fixed_point_sum_sql_spark("l.l_extendedprice", 2)
+    return fixture_sql(spark, sf_dir, _Q11_BODY, val=val, val_total=val)
 
 
 # --- Q12: latency classes (CASE-sum pivot on a derived bucket) ------------
@@ -192,12 +184,11 @@ def sql_q12_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     standing in for the missing l_shipmode), restricted to late lines
     (>= 60 days). Calendar-day difference on both engines; the counting
     sums are exact integers."""
-    return _sql(
+    return fixture_sql(
         spark,
         sf_dir,
-        _Q12_BODY.format(
-            lat="datediff(CAST(l.l_shipdate AS DATE), CAST(o.o_orderdate AS DATE))", **_SPARK_T
-        ),
+        _Q12_BODY,
+        lat="datediff(CAST(l.l_shipdate AS DATE), CAST(o.o_orderdate AS DATE))",
     )
 
 
@@ -223,7 +214,7 @@ def sql_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the OUTER JOIN condition (not WHERE — zero-order customers must
     survive with c_count = 0), then a second aggregation folds customers
     into distribution buckets."""
-    return _sql(spark, sf_dir, _Q13_BODY.format(**_SPARK_T))
+    return fixture_sql(spark, sf_dir, _Q13_BODY)
 
 
 # --- Q15: top supplier (CTE + scalar-max subquery) ------------------------
@@ -252,10 +243,8 @@ def sql_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice — once joined to supplier, once inside the scalar-max subquery.
     Fixed-point revenue makes the max-equality float compare exact; Spark
     plans the CTE once and reuses the exchange where beneficial."""
-    return _sql(
-        spark,
-        sf_dir,
-        _Q15_BODY.format(rev=fixed_point_sum_sql_spark(_REV, 4), ts="TIMESTAMP_NTZ", **_SPARK_T),
+    return fixture_sql(
+        spark, sf_dir, _Q15_BODY, rev=fixed_point_sum_sql_spark(_REV, 4), ts="TIMESTAMP_NTZ"
     )
 
 
@@ -279,7 +268,7 @@ def sql_q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the complaints filter). NOT IN over a non-nullable key compiles to a
     null-aware anti join; the distinct count shuffles once on the group
     keys."""
-    return _sql(spark, sf_dir, _Q16_BODY.format(**_SPARK_T))
+    return fixture_sql(spark, sf_dir, _Q16_BODY)
 
 
 # --- Q19: disjunctive conjunctive ranges ----------------------------------
@@ -303,7 +292,7 @@ def sql_q19_disjunctive_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     an equi-join; the disjunction is a residual filter — Catalyst pushes
     the l_quantity bounds (1..30 envelope) and the p_brand IN set down to
     both scans via constraint extraction."""
-    return _sql(spark, sf_dir, _Q19_BODY.format(rev=fixed_point_sum_sql_spark(_REV, 4), **_SPARK_T))
+    return fixture_sql(spark, sf_dir, _Q19_BODY, rev=fixed_point_sum_sql_spark(_REV, 4))
 
 
 # --- Q20: nested IN + correlated scalar over grouped derived table --------
@@ -335,7 +324,7 @@ def sql_q20_promo_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived table (the availqty > 0.5*qty correlation of the original).
     Both aggregates decorrelate to hash aggregates joined on l_suppkey;
     quantity sums are integral doubles, exact on both engines."""
-    return _sql(spark, sf_dir, _Q20_BODY.format(ts="TIMESTAMP_NTZ", **_SPARK_T))
+    return fixture_sql(spark, sf_dir, _Q20_BODY, ts="TIMESTAMP_NTZ")
 
 
 # --- Q21: EXISTS + NOT EXISTS double correlation --------------------------
@@ -368,7 +357,7 @@ def sql_q21_sole_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing receipt-past-commit predicate). The EXISTS becomes a
     left-semi and the NOT EXISTS a left-anti join on l_orderkey, both
     with non-equi residuals — no per-row subquery execution."""
-    return _sql(spark, sf_dir, _Q21_BODY.format(**_SPARK_T))
+    return fixture_sql(spark, sf_dir, _Q21_BODY)
 
 
 # --- Q22: scalar threshold + anti join ------------------------------------
@@ -406,13 +395,11 @@ def sql_q22_dormant_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     as exact fixed-point sum / count so the threshold compare is
     bit-identical across engines; NOT EXISTS anti-joins against the
     date-filtered orders."""
-    return _sql(
+    return fixture_sql(
         spark,
         sf_dir,
-        _Q22_BODY.format(
-            bal=fixed_point_sum_sql_spark("c.c_acctbal", 2),
-            bal_avg=fixed_point_sum_sql_spark("c_acctbal", 2),
-            ts="TIMESTAMP_NTZ",
-            **_SPARK_T,
-        ),
+        _Q22_BODY,
+        bal=fixed_point_sum_sql_spark("c.c_acctbal", 2),
+        bal_avg=fixed_point_sum_sql_spark("c_acctbal", 2),
+        ts="TIMESTAMP_NTZ",
     )

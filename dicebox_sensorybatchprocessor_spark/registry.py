@@ -55,9 +55,12 @@ def register(
     immutable plans, so reuse is safe for any purely declarative query and
     skips re-paying py4j plan construction, analysis, and whole-stage
     codegen compilation on every invocation (measured ~1.2 s of the 1.4 s
-    warm wall-clock of TPC-H Q1 at sf0.1; data is still re-scanned on each
-    collect). Operators with driver-side side effects (file sinks, staged
-    streaming replays) must pass ``cache_plan=False``.
+    warm wall-clock of TPC-H Q1 at sf0.1). A repeat call is also not a
+    re-run of the query: collecting a memoized plan that has an exchange
+    again reuses the first run's shuffle output and skips those stages
+    (measured 10.4× faster than a fresh plan at sf0.1); only exchange-free
+    plans re-scan their input. Operators with driver-side side effects
+    (file sinks, staged streaming replays) must pass ``cache_plan=False``.
     """
 
     def deco(fn: QueryFn) -> QueryFn:

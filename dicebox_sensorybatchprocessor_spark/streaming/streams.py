@@ -156,9 +156,10 @@ def _run_to_table(spark: SparkSession, df: DataFrame, name: str, mode: str) -> D
 # sf_dir): cache them so repeated invocations (driver correctness run +
 # bench + pytest in one session) and ops sharing a layout (stream_dedup /
 # stream_dedup_wm both stage [raw, every-10th-redelivered]) pay the
-# parquet write exactly once. Only ops that never mutate the staged dir
-# may pass cache_key (stream_watermark renames a late file in, so it
-# stays uncached).
+# parquet write exactly once. A cached dir is immutable: an op that adds
+# or renames files mid-replay (stream_watermark, stream_join_outer) takes
+# a private hard-linked copy via _stage_linked and mutates only that,
+# and links files out of a cached dir rather than moving them.
 _STAGE_CACHE: dict[tuple[str, str], str] = {}
 
 

@@ -151,12 +151,16 @@ def fixed_point_sum_sql(expr: str, decimals: int) -> str:
 
 
 def fixed_point_sum_sql_spark(expr: str, decimals: int) -> str:
-    """Spark SQL string form of :func:`fixed_point_sum` (same hi/lo long
-    decomposition), for spark.sql-surface queries that must hash-match the
-    DuckDB HUGEINT oracle. ``expr`` may be any SQL expression, including a
-    CASE WHEN for filtered sums."""
-    factor = float(10**decimals)
+    """Spark SQL string form of :func:`fixed_point_sum` (same single-long
+    and hi/lo long decompositions), the one builder every spark.sql-surface
+    query splices in to hash-match the DuckDB HUGEINT oracle. ``expr`` may
+    be any SQL expression, including a CASE WHEN for filtered sums. The
+    factor is a double literal, as in the Column form: a bare
+    ``10000.0`` is a DECIMAL in Spark SQL."""
+    factor = f"{float(10**decimals)}D"
     units = f"CAST(round(({expr}) * {factor}, 0) AS BIGINT)"
+    if decimals <= 2:
+        return f"CAST(SUM({units}) AS DOUBLE) / {factor}"
     lo = f"pmod({units}, {_CHUNK})"
     return (
         f"CAST(CAST(SUM(CAST(({units} - {lo}) / CAST({_CHUNK} AS DOUBLE) AS BIGINT))"

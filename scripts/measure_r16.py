@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Round-15 optimization measurement harness (guide §1).
+"""Round-16 optimization measurement harness (guide §1).
 
 For each named query: capture .explain("formatted") to
 plans/r16/<name>_<tag>.txt, then time the computation against the noop
@@ -8,7 +8,7 @@ one warm-up + N warm samples, labelled via setJobDescription (§1.5).
 
 Usage:
   python scripts/measure_r16.py <tag> [sf_dir] [query ...]
-  (no query names => the default round-15 target list)
+  (no query names => the default round-16 target list)
 """
 
 from __future__ import annotations
