@@ -87,6 +87,26 @@ DRIVER_WINDOW = 50
 #   [fill]  the ENTIRE remaining 33-query r9-evidence block, then the
 #           r10 head (6) — after this window no query's latest driver
 #           evidence predates r10 (the VERDICT r14 #4 "Done" bar).
+# Driver-window head for batch-scaled lake ingest (derived Bloom filters,
+# the manifest-recorded schema and the one snapshot reader in lake.py and
+# mv.py): the 13 lake and stream queries it touched, as printed by
+# `python scripts/plan_window.py --tuple`. With _SQL_BINDING_PRIORITY the
+# touched set is 35 of the 50 slots; the rotation fill is left out again.
+_LAKE_INGEST_PRIORITY = (
+    "stream_ann_ingest",
+    "stream_substring_dedup",
+    "stream_upsert_merge",
+    "maintenance_compact",
+    "lake_cdc_apply",
+    "lake_incremental_mv",
+    "lake_zorder_skip",
+    "lake_compact_small",
+    "stream_lake_mv",
+    "lake_merge_into",
+    "lake_constraints_restore",
+    "lake_update_delete",
+    "stream_lake_cdc",
+)
 # Driver-window head for the per-call spark.sql binding: the 22 queries
 # whose code it touched (the touched set printed by `python
 # scripts/plan_window.py --tuple` — the 21 spark.sql operators and
@@ -974,14 +994,15 @@ def all_queries() -> dict[str, QuerySpec]:
     """Import every operator module (side effect: registration) and return
     the full registry, reordered so the driver's 50-query correctness
     window covers refactor-touched and oldest-verified operators first
-    (see _SQL_BINDING_PRIORITY and _ROUND16_PRIORITY; the earlier round
-    tuples are the stable tail). Keys are the SURVEY.md §2 operator IDs."""
+    (see _LAKE_INGEST_PRIORITY, _SQL_BINDING_PRIORITY and
+    _ROUND16_PRIORITY; the earlier round tuples are the stable tail). Keys are the SURVEY.md §2 operator IDs."""
     import importlib
 
     for mod in _OPERATOR_MODULES:
         importlib.import_module(mod)
     ordered: dict[str, QuerySpec] = {}
     for name in (
+        *_LAKE_INGEST_PRIORITY,
         *_SQL_BINDING_PRIORITY,
         *_ROUND16_PRIORITY,
         *_ROUND15_PRIORITY,

@@ -43,12 +43,19 @@ protocol reduced to its load-bearing core:
   O(full file list as JSON) per version; per-file zone-map stats are
   likewise collected only for ADDED files and carried forward.
   Pre-round-10 self-contained manifests (a ``files`` key) still
-  resolve — the reader treats them as their own checkpoint.
+  resolve — the reader treats them as their own checkpoint. Each
+  manifest also carries the table ``schema`` its live files share (read
+  from the added files' Spark footer key at commit, Delta's
+  ``schemaString``), and per-file Bloom filters of a bucketed commit are
+  DERIVED from the filters of the files it replaces, so a commit's
+  driver work scales with the batch, not the table.
 
-Readers load ``spark.read.parquet(*files)`` — partition pruning, filter
-pushdown, and column pruning behave exactly as on a directory scan, and
-the file list itself enables the next-level optimization (data skipping
-by per-file stats) that a bare directory listing cannot.
+Readers load the snapshot's files through one reader,
+``ManifestTable._scan``: ``spark.read.schema(<recorded>).parquet(*files)``,
+so no schema-inference job runs — partition pruning, filter pushdown,
+and column pruning behave exactly as on a directory scan, and the file
+list itself enables the next-level optimization (data skipping by
+per-file stats) that a bare directory listing cannot.
 """
 
 from __future__ import annotations
@@ -80,30 +87,61 @@ _PER_FILE_KEYS = (
     "fmt",
     "n_files",
 )
+# footer key under which Spark records a data file's schema as JSON — the
+# key Spark's own parquet schema inference reads
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _bloom_build(
-    values, bits_per_value: int = 10, k: int = 7, max_bits: int = 1 << 17
-) -> tuple[int, str]:
-    """(n_bits, hex bitset) Bloom filter over ``values`` with a PORTABLE
-    hash family (md5-prefix, like the minhash family) — the filter must
-    verify identically on any future reader. n_bits is the next power
-    of two of ``bits_per_value × |values|`` (≈1% false positives at
-    k=7), capped so a single file's filter stays ≤16 KiB."""
+def _as_nullable(dt):
+    """Spark's ``asNullable`` over schema JSON: a file-source read sees
+    every field, array element and map value as nullable, whatever the
+    writer declared, so files differing only in nullability read alike."""
+    if not isinstance(dt, dict):
+        return dt
+    if dt.get("type") == "struct":
+        fields = [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])}
+            for f in dt["fields"]
+        ]
+        return {**dt, "fields": fields}
+    if dt.get("type") == "array":
+        return {**dt, "containsNull": True, "elementType": _as_nullable(dt["elementType"])}
+    if dt.get("type") == "map":
+        return {
+            **dt,
+            "valueContainsNull": True,
+            "keyType": _as_nullable(dt["keyType"]),
+            "valueType": _as_nullable(dt["valueType"]),
+        }
+    return dt
+
+
+def _bloom_n_bits(
+    n_values: int, bits_per_value: int = 10, max_bits: int = 1 << 17
+) -> int:
+    """Filter size for ``n_values`` distinct values: the next power of
+    two of ``bits_per_value × n_values`` (≈1% false positives at k=7),
+    at least 64 and capped so a single file's filter stays ≤16 KiB."""
+    return max(64, min(max_bits, 1 << (bits_per_value * max(1, n_values)).bit_length()))
+
+
+def _bloom_bitset(values, n_bits: int, k: int = 7):
+    """Packed bitset (numpy uint8, bit ``h`` at byte ``h >> 3``, bit
+    ``h & 7``) of canonical-string ``values`` under a PORTABLE hash
+    family (md5-prefix, like the minhash family) — the filter must
+    verify identically on any future reader. md5 runs once per (value,
+    hash index); the modulo and the bit-set are vectorised."""
     import hashlib
 
-    n = max(64, min(max_bits, 1 << (bits_per_value * max(1, len(values))).bit_length()))
-    bits = bytearray(n // 8)
-    for v in values:
-        for i in range(k):
-            h = (
-                int.from_bytes(
-                    hashlib.md5(f"{i}|{v}".encode()).digest()[:8], "big"
-                )
-                % n
-            )
-            bits[h >> 3] |= 1 << (h & 7)
-    return n, bytes(bits).hex()
+    import numpy as np
+
+    md5 = hashlib.md5
+    prefixes = b"".join(
+        md5(f"{i}|{v}".encode()).digest()[:8] for v in values for i in range(k)
+    )
+    hit = np.zeros(n_bits, dtype=bool)
+    hit[np.frombuffer(prefixes, dtype=">u8") % np.uint64(n_bits)] = True
+    return np.packbits(hit, bitorder="little")
 
 
 def _bloom_may_contain(n_bits: int, hexstr: str, value, k: int = 7) -> bool:
@@ -129,6 +167,50 @@ def _bloom_canon(value) -> str:
             f"bloom index supports int/string columns; got {type(value).__name__}"
         )
     return str(value)
+
+
+def _bloom_distinct(pf, col: str):
+    """Distinct non-null values of ``col`` in the open parquet file
+    ``pf``, as a pyarrow string array of their canonical forms (an int
+    casts to the same decimal text ``str`` gives it). The column streams
+    through ``iter_batches`` (ADVICE r10): peak driver memory is one
+    Arrow batch plus the distinct values, never the whole column. Same
+    type rule as :func:`_bloom_canon`; an all-null column of any type
+    yields no values and raises nothing."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    typ = pf.schema_arrow.field(col).type
+    parts = [
+        pc.unique(batch.column(0).drop_null())
+        for batch in pf.iter_batches(columns=[col], batch_size=65536)
+    ]
+    vals = pc.unique(pa.chunked_array(parts, type=typ))
+    if len(vals) and not (
+        pa.types.is_integer(typ) or pa.types.is_string(typ)
+        or pa.types.is_large_string(typ)
+    ):
+        raise TypeError(f"bloom index supports int/string columns; got {typ}")
+    return vals.cast(pa.string())
+
+
+def _bloom_parents(manifest: dict, base_snap: dict, base_blooms: dict) -> dict:
+    """{added file: {removed file: its filters}} for a bucketed commit:
+    each added file paired with the files of its bucket that the commit
+    removes — the filters :meth:`ManifestTable.collect_file_blooms` may
+    derive from. A bucket whose removed files are not all indexed gets
+    no entry; unbucketed commits get none."""
+    old_buckets = base_snap.get("file_buckets", {})
+    removed: dict[int, list[str]] = {}
+    for f in manifest["remove"]:
+        if f in old_buckets:
+            removed.setdefault(old_buckets[f], []).append(f)
+    out = {}
+    for f, b in manifest.get("add_buckets", {}).items():
+        ps = removed.get(b)
+        if ps and all(p in base_blooms for p in ps):
+            out[f] = {p: base_blooms[p] for p in ps}
+    return out
 
 
 class CommitConflict(RuntimeError):
@@ -558,13 +640,36 @@ class ManifestTable:
             if version is not None:
                 raise ValueError("pass version OR timestamp, not both")
             version = self.version_at(timestamp)
-        files = self.data_files(version)
+        if version is None:
+            version = self.latest_version()
+        files = self.snapshot(version)["files"]
         if not files:
             raise ValueError(f"ManifestTable {self.root} has no committed version")
+        return self._scan(spark, files, version, merge_schema)
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        rels: list[str],
+        version: int,
+        merge_schema: bool = False,
+    ) -> DataFrame:
+        """The one reader of the table's data files: ``rels``
+        (root-relative, live at ``version``) load with the schema the
+        manifest recorded at ``version``, so creating the DataFrame
+        opens no footer and starts no Spark job. ``merge_schema=True``
+        (a footer union) and versions with no recorded schema infer
+        from the footers, as a bare ``spark.read.parquet`` does."""
+        from pyspark.sql.types import StructType
+
         reader = spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*files)
+        else:
+            schema = self.snapshot(version).get("schema")
+            if schema is not None:
+                reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(*[os.path.join(self.root, r) for r in rels])
 
     # -- writer protocol ----------------------------------------------
     def _validate(self, df: DataFrame) -> DataFrame:
@@ -747,6 +852,41 @@ class ManifestTable:
         an exactly-once writer performs before re-applying a batch."""
         return int(self.snapshot(version).get("txns", {}).get(app_id, -1))
 
+    def _commit_schema(
+        self, added: list[str], n_kept: int, base_snap: dict
+    ) -> dict | None:
+        """The Spark schema (JSON, nullable as readers see it) that every
+        live file of a commit shares, or None. It comes from the added
+        files' footer key that Spark's own inference reads, so no Spark
+        job runs; a commit that adds no file carries the base's forward.
+        None when the added files disagree, when the kept files' recorded
+        schema differs or is unknown (a ``schema_evolution`` merge), or
+        when a file lacks Spark's key (a pyarrow-written file): readers
+        then infer, as a bare ``spark.read.parquet`` does. Delta's log
+        keeps ``schemaString`` for the same reason."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        base = base_snap.get("schema")
+        if not added:
+            return base
+        if n_kept and base is None:
+            return None
+        schema = None
+        for rel in added:
+            try:
+                meta = pq.read_metadata(os.path.join(self.root, rel)).metadata
+            except (OSError, pa.ArrowException):
+                return None
+            raw = (meta or {}).get(_SPARK_SCHEMA_KEY)
+            if raw is None:
+                return None
+            got = _as_nullable(json.loads(raw))
+            if schema is not None and got != schema:
+                return None
+            schema = got
+        return schema if not n_kept or schema == base else None
+
     def commit(
         self,
         files: list[str],
@@ -783,7 +923,10 @@ class ManifestTable:
         incrementally — carried files keep the stats their adding commit
         recorded, so commit cost is O(delta), never O(table). Every
         ``_CKPT_EVERY`` versions a parquet checkpoint snapshots the full
-        state for O(1)-ish resolution."""
+        state for O(1)-ish resolution. The table schema the live files
+        share rides every manifest (:meth:`_commit_schema`), and an
+        added bucket file's Bloom filters derive from the removed files
+        of its bucket (:func:`_bloom_parents`)."""
         next_v = base_version + 1
         base_snap = self.snapshot(base_version)
         base_files = base_snap.get("files", [])
@@ -857,7 +1000,10 @@ class ManifestTable:
             need_b = [f for f in files if f not in base_blooms]
             if need_b:
                 manifest["add_blooms"] = self.collect_file_blooms(
-                    need_b, tuple(bcols), max_bits=mb
+                    need_b,
+                    tuple(bcols),
+                    max_bits=mb,
+                    parents=_bloom_parents(manifest, base_snap, base_blooms),
                 )
         add_sizes = {}
         for f in manifest["add"]:
@@ -866,6 +1012,11 @@ class ManifestTable:
                 add_sizes[f] = os.path.getsize(p)
         if add_sizes:
             manifest["add_sizes"] = add_sizes
+        schema = self._commit_schema(
+            manifest["add"], len(files) - len(manifest["add"]), base_snap
+        )
+        if schema is not None:
+            manifest["schema"] = schema
         fd, tmp = tempfile.mkstemp(
             dir=os.path.join(self.root, _MANIFEST_DIR), suffix=".tmp"
         )
@@ -1044,23 +1195,43 @@ class ManifestTable:
         files: list[str],
         bloom_cols: tuple[str, ...],
         max_bits: int | None = None,
+        parents: dict[str, dict[str, dict]] | None = None,
     ) -> dict[str, dict[str, list]]:
         """{relative path: {col: [n_bits, hex bitset]}} — per-file Bloom
         filters over the column's distinct values (streamed pyarrow
-        batches, driver-local). The point-lookup complement to zone
-        maps: min/max cannot prune an unclustered high-cardinality
-        column, a bloom prunes any file that provably lacks the value.
-        Columns missing from a file's schema are skipped (must-keep,
-        like stats).
+        batches, driver-local; see :func:`_bloom_distinct`). The
+        point-lookup complement to zone maps: min/max cannot prune an
+        unclustered high-cardinality column, a bloom prunes any file
+        that provably lacks the value. Columns missing from a file's
+        schema are skipped (must-keep, like stats).
 
-        MEMORY (ADVICE r10): the column is consumed via
-        ``iter_batches``, never materialized whole — peak driver memory
-        is one Arrow batch plus the per-file distinct set (bounded by
-        the column's distinct count, which the bloom sizing cap already
-        assumes is manifest-scale). Without this, every compaction on a
-        bloom-indexed table would pull the largest rewritten file's
-        column into the driver inside commit()."""
+        DERIVED FILTERS: ``parents`` maps a file to the files it
+        replaces, {parent path: parent's {col: [n_bits, hex]}} — for a
+        bucketed table's commit, the same bucket's files it removes. A
+        column's filter is then OR(parent bitsets) | bits(values no
+        parent holds), so md5 runs over the batch's new values instead
+        of the whole bucket. Two checks gate it: every parent filter
+        has the n_bits this file's distinct count sizes to, and every
+        parent value is still in this file. Under them the bits equal a
+        full build's, since a set's filter is the OR of its members'
+        bits. A failed check (a deleted key, a changed non-key value, a
+        size step, an unreadable parent) takes the full build."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
+
+        cap = {"max_bits": int(max_bits)} if max_bits else {}
+        parents = parents or {}
+
+        def parent_values(rel: str, col: str):
+            try:
+                pf = pq.ParquetFile(os.path.join(self.root, rel))
+                if col in pf.schema_arrow.names:
+                    return _bloom_distinct(pf, col)
+            except (OSError, pa.ArrowException):
+                pass  # unreadable or vacuumed parent: full build
+            return None
 
         out: dict[str, dict[str, list]] = {}
         for rel in files:
@@ -1070,15 +1241,28 @@ class ManifestTable:
             for col in bloom_cols:
                 if col not in names:
                     continue
-                distinct: set = set()
-                for batch in pf.iter_batches(columns=[col], batch_size=65536):
-                    arr = batch.column(0).drop_null()
-                    distinct.update(_bloom_canon(v) for v in arr.to_pylist())
-                n, hx = _bloom_build(
-                    distinct,
-                    **({"max_bits": int(max_bits)} if max_bits else {}),
-                )
-                cols[col] = [n, hx]
+                vals = _bloom_distinct(pf, col)
+                n = _bloom_n_bits(len(vals), **cap)
+                inherited, fresh = None, vals
+                ps = parents.get(rel, {})
+                if ps and all(p.get(col, (None,))[0] == n for p in ps.values()):
+                    pvals = [parent_values(p, col) for p in ps]
+                    if all(v is not None for v in pvals):
+                        held = pa.concat_arrays(pvals)
+                        if pc.is_in(held, value_set=vals).false_count == 0:
+                            inherited = np.bitwise_or.reduce(
+                                [
+                                    np.frombuffer(bytes.fromhex(p[col][1]), np.uint8)
+                                    for p in ps.values()
+                                ]
+                            )
+                            fresh = vals.filter(
+                                pc.invert(pc.is_in(vals, value_set=held))
+                            )
+                bits = _bloom_bitset(fresh.to_pylist(), n)
+                if inherited is not None:
+                    bits |= inherited
+                cols[col] = [n, bits.tobytes().hex()]
             out[rel] = cols
         return out
 
@@ -1091,7 +1275,10 @@ class ManifestTable:
         """Record a Bloom point-lookup index on ``cols``: one metadata
         commit computing filters for every CURRENT file; later commits
         extend the index incrementally (added files only — carried
-        files keep their filters, footers never re-read).
+        files keep their filters, footers never re-read), and a
+        bucketed commit derives a rewritten file's filter from the
+        files it replaces, hashing only the values they lacked (see
+        :meth:`collect_file_blooms`).
 
         SIZING: filters target ~10 bits per distinct value (≈1% false
         positives at k=7) up to a per-file cap — default 2^17 bits
@@ -1165,8 +1352,7 @@ class ManifestTable:
         files = [f for f in snap["files"] if f in files]
         if not files:
             return self.read(spark, version).filter(F.lit(False))
-        df = spark.read.parquet(*[os.path.join(self.root, f) for f in files])
-        return df.filter(F.col(col) == F.lit(value))
+        return self._scan(spark, files, version).filter(F.col(col) == F.lit(value))
 
     def prune_files(
         self, col: str, lo, hi, version: int | None = None
@@ -1174,9 +1360,9 @@ class ManifestTable:
         """Root-relative data files of the snapshot whose [min, max] for
         ``col`` intersects [lo, hi] (None = unbounded). Files without
         recorded stats for ``col`` are kept — skipping must never drop a
-        row. Pair with ``spark.read.parquet(*table.abs(files))`` plus
-        the real filter: the stats only choose which footers Spark ever
-        opens."""
+        row. :meth:`read_range` scans the kept files and applies the
+        real filter on top: the stats only choose which footers Spark
+        ever opens."""
         snap = self.snapshot(version)
         stats = snap.get("file_stats", {})
         kept = []
@@ -1201,10 +1387,12 @@ class ManifestTable:
         construction; cheaper by the skipped files."""
         from pyspark.sql import functions as F
 
+        if version is None:
+            version = self.latest_version()
         files = self.prune_files(col, lo, hi, version)
         if not files:
             return self.read(spark, version).filter(F.lit(False))
-        df = spark.read.parquet(*[os.path.join(self.root, f) for f in files])
+        df = self._scan(spark, files, version)
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:
@@ -1235,9 +1423,11 @@ class ManifestTable:
         construction; cheaper by the skipped files."""
         from pyspark.sql import functions as F
 
+        if version is None:
+            version = self.latest_version()
         files = self.prune_files_box(preds, version)
         base = (
-            spark.read.parquet(*[os.path.join(self.root, f) for f in files])
+            self._scan(spark, files, version)
             if files
             else self.read(spark, version).filter(F.lit(False))
         )
@@ -1459,9 +1649,7 @@ class ManifestTable:
             # mergeSchema: the small tail may straddle a schema evolution;
             # the packed files settle under the widest schema of the TAIL
             # only — carried files are untouched by contract
-            df = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.root, f) for f in small_files]
-            )
+            df = self._scan(spark, small_files, snap["version"], merge_schema=True)
             new_files = self.stage(df, n_files=n_out)
             try:
                 version = self.commit(
@@ -1509,7 +1697,7 @@ class ManifestTable:
                 }
             keep = [f for f in snap["files"] if fb[f] not in multi]
             rewrite = [f for f in snap["files"] if fb[f] in multi]
-            df = spark.read.parquet(*[self.root + "/" + f for f in rewrite])
+            df = self._scan(spark, rewrite, snap["version"])
             new_map = self.stage_bucketed(
                 df, tuple(snap["bucket_keys"]), snap["n_buckets"]
             )
@@ -1777,11 +1965,8 @@ def merge_upsert(
             keep_files = [f for f in snap["files"] if fb[f] not in touched]
             rewrite_files = [f for f in snap["files"] if fb[f] in touched]
             if rewrite_files:
-                reader = spark.read
-                if schema_evolution:
-                    reader = reader.option("mergeSchema", "true")
-                old = reader.parquet(
-                    *[table.root + "/" + f for f in rewrite_files]
+                old = table._scan(
+                    spark, rewrite_files, snap["version"], merge_schema=schema_evolution
                 )
                 merged = old.join(
                     change_keys, keys, "left_anti"
@@ -2054,11 +2239,10 @@ def merge_into(
             }
             keep_files = [f for f in snap["files"] if fb[f] not in touched]
             rewrite_files = [f for f in snap["files"] if fb[f] in touched]
-            reader = spark.read
-            if schema_evolution:
-                reader = reader.option("mergeSchema", "true")
             region = (
-                reader.parquet(*[table.root + "/" + f for f in rewrite_files])
+                table._scan(
+                    spark, rewrite_files, snap["version"], merge_schema=schema_evolution
+                )
                 if rewrite_files
                 else table.read(
                     spark, snap["version"], merge_schema=schema_evolution
@@ -2162,9 +2346,9 @@ def delete_where(
             return {"version": snap["version"], "n_files_touched": 0,
                     "n_files_carried": len(snap["files"]), "noop": True}
         keep = [f for f in snap["files"] if f not in set(touched)]
-        remainder = spark.read.parquet(
-            *[table.root + "/" + f for f in touched]
-        ).filter(~F.coalesce(F.expr(condition), F.lit(False)))
+        remainder = table._scan(spark, touched, snap["version"]).filter(
+            ~F.coalesce(F.expr(condition), F.lit(False))
+        )
         if snap.get("n_buckets"):
             new_map = table.stage_bucketed(
                 remainder, tuple(snap["bucket_keys"]), snap["n_buckets"]
@@ -2229,7 +2413,7 @@ def update_where(
             return {"version": snap["version"], "n_files_touched": 0,
                     "n_files_carried": len(snap["files"]), "noop": True}
         keep = [f for f in snap["files"] if f not in set(touched)]
-        region = spark.read.parquet(*[table.root + "/" + f for f in touched])
+        region = table._scan(spark, touched, snap["version"])
         hit = F.coalesce(F.expr(condition), F.lit(False))
         cols = [
             F.when(hit, F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)

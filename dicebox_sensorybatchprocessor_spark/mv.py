@@ -294,10 +294,11 @@ class MaterializedAgg:
         sf0.1 in r10/r11 — while larger tables go incremental unless the
         delta's BYTES exceed ``recompute_ratio ×`` the snapshot's (a
         compaction commit is the extreme case: plus+minus spans ~2× the
-        table while recompute scans it once). Sizes come from one
-        driver-side stat sweep over the two file lists; if any file
-        can't be statted (non-local scheme), routing falls back to the
-        r10 file-count ratio.
+        table while recompute scans it once). Sizes are the ones the base
+        manifest recorded at commit (``ManifestTable._file_sizes``, as
+        ``optimize`` reads them), so routing stats no data file; if a
+        file without a recorded size can't be statted, routing falls
+        back to the r10 file-count ratio.
         ``mode='incremental'`` / ``mode='recompute'`` force a path."""
         if mode not in ("auto", "incremental", "recompute"):
             raise ValueError(f"unknown refresh mode {mode!r}")
@@ -314,10 +315,10 @@ class MaterializedAgg:
                     "noop": True,
                     "mode": "noop",
                 }
-            old_files = (
-                set(self.base.snapshot(v_from)["files"]) if v_from else set()
-            )
-            new_files = set(self.base.snapshot(v_to)["files"])
+            old_snap = self.base.snapshot(v_from) if v_from else None
+            new_snap = self.base.snapshot(v_to)
+            old_files = set(old_snap["files"]) if old_snap else set()
+            new_files = set(new_snap["files"])
             plus = sorted(new_files - old_files)
             minus = sorted(old_files - new_files)
             if not plus and not minus:
@@ -347,17 +348,13 @@ class MaterializedAgg:
                 f"__c_{c}" not in old_state.columns for c in self._sum_cols
             )
             if mode == "auto" and not legacy_state:
-                import os
-
                 try:
-                    delta_b = sum(
-                        os.path.getsize(os.path.join(self.base.root, f))
-                        for f in plus + minus
+                    new_sizes = self.base._file_sizes(new_snap)
+                    old_sizes = self.base._file_sizes(old_snap) if old_snap else {}
+                    delta_b = sum(new_sizes[f] for f in plus) + sum(
+                        old_sizes[f] for f in minus
                     )
-                    table_b = sum(
-                        os.path.getsize(os.path.join(self.base.root, f))
-                        for f in new_files
-                    )
+                    table_b = sum(new_sizes.values())
                     routed = _route_refresh(
                         delta_b, table_b, recompute_ratio, small_table_bytes
                     )
@@ -379,11 +376,9 @@ class MaterializedAgg:
                 merged = self._full_state(spark, v_to)
                 plus, minus = sorted(new_files), []
             else:
-                read = lambda rels: spark.read.parquet(  # noqa: E731
-                    *[self.base.root + "/" + r for r in rels]
-                )
                 delta = self._delta_state(
-                    read(plus) if plus else None, read(minus) if minus else None
+                    self.base._scan(spark, plus, v_to) if plus else None,
+                    self.base._scan(spark, minus, v_from) if minus else None,
                 )
                 merged = self._merge_states(old_state, delta)
                 merged = self._attach_minmax(
