@@ -49,50 +49,17 @@ _OPERATOR_MODULES = (
 )
 
 
-# Driver-facing query order. The driver's correctness harness checks the
-# FIRST 50 registered queries each round (CORRECTNESS_r0N.json == exactly
-# list(all_queries())[:50]), so ordering is the verification budget.
-#
-# The driver window size the rotation below is planned against.
+# The driver's correctness harness checks only the first DRIVER_WINDOW
+# queries of all_queries() (CORRECTNESS_rN.json == list(all_queries())[:50]),
+# so _DRIVER_WINDOW is the verification budget. Regenerate it with
+# `python scripts/plan_window.py --tuple` and paste the output over it:
+# queries touched since the last `round N:` commit come first (the rotation
+# test requires them), then the oldest driver-green fill. 35 of the 50
+# slots are touched, so 15 remain for the next change.
 DRIVER_WINDOW = 50
 
-# Round-14 window (VERDICT r13 Next #1/#3 — register the multi-query ANN
-# recall sweep, drain the ENTIRE r6+r7 evidence tail). Composition, in
-# order (generated by `python scripts/plan_window.py --tuple` at HEAD;
-# the rotation test enforces the touched head):
-#   [head]  the 5 NEW registrations (sim_ann_recall_sweep, sim_knn_join,
-#           graph_label_propagation, dedup_communities,
-#           corpus_token_budget — never driver-checked; the round's other work
-#           lands in INFRA modules (utils.scratch_stage,
-#           session.cluster_profile, bench.py load rerun) or tests,
-#           which the per-function dirtiness correctly exempts from
-#           window fronting).
-#   [fill]  ALL 7 remaining r6-evidence queries, the ENTIRE 35-query r7
-#           block, then the r9 block head (3) — after this window no
-#           query's latest driver evidence predates r9 (the VERDICT r13
-#           "Done" bar).
-# Entries beyond the 50-slot window keep the prior ordering as a stable
-# tail (the all_queries() loop skips duplicates).
-# Round-15 driver-window priority (generated by
-# `python scripts/plan_window.py --tuple` at HEAD; the rotation test
-# enforces the touched head). Composition:
-#   [head]  the 11 code-touched queries — the 4 NEW registrations
-#           (sim_knn_join_ann, dedup_communities_incremental,
-#           decontaminate_semantic fronted
-#           with their families) plus the queries dirtied by the r15
-#           refactors (knn_join vectorized tie-robust selection, the
-#           DECIMAL(38,0) token-budget product, checkpoint_every on the
-#           graph loops, the classifier explode/hash-agg rebuild, the
-#           sweep memo eviction + norm>0 sampling predicates).
-#   [fill]  the ENTIRE remaining 33-query r9-evidence block, then the
-#           r10 head (6) — after this window no query's latest driver
-#           evidence predates r10 (the VERDICT r14 #4 "Done" bar).
-# Driver-window head for batch-scaled lake ingest (derived Bloom filters,
-# the manifest-recorded schema and the one snapshot reader in lake.py and
-# mv.py): the 13 lake and stream queries it touched, as printed by
-# `python scripts/plan_window.py --tuple`. With _SQL_BINDING_PRIORITY the
-# touched set is 35 of the 50 slots; the rotation fill is left out again.
-_LAKE_INGEST_PRIORITY = (
+_DRIVER_WINDOW = (
+    # touched since the last `round N:` commit (required)
     "stream_ann_ingest",
     "stream_substring_dedup",
     "stream_upsert_merge",
@@ -106,13 +73,6 @@ _LAKE_INGEST_PRIORITY = (
     "lake_constraints_restore",
     "lake_update_delete",
     "stream_lake_cdc",
-)
-# Driver-window head for the per-call spark.sql binding: the 22 queries
-# whose code it touched (the touched set printed by `python
-# scripts/plan_window.py --tuple` — the 21 spark.sql operators and
-# join_interval_chunked). The rotation fill is left out, so the rest of
-# the window keeps its prior order.
-_SQL_BINDING_PRIORITY = (
     "sql_q10_returned_items",
     "sql_q18_large_customers",
     "sql_q21_sole_blame",
@@ -135,887 +95,34 @@ _SQL_BINDING_PRIORITY = (
     "sql_q19_disjunctive_ranges",
     "sql_q20_promo_concentration",
     "sql_q5_local_supplier_volume",
-)
-# Round-16 driver-window priority (generated by
-# `python scripts/plan_window.py --tuple` at HEAD; the rotation test
-# enforces that every query whose backing code this optimization round
-# touched sits inside the 50-slot window — boundary 2b6a7287c,
-# touched=17, fill=33).
-_ROUND16_PRIORITY = (
-    # -- touched by the r16 optimization pass (blocked all-pairs routes,
-    # fold-deterministic kernels, parquet-footer route probes, chunked
-    # containment GEMM + prefix fallback, LSH single-action recall +
-    # 4-table sweep, linked replay staging) --
-    "dedup_communities",
-    "dedup_minhash_banded",
-    "dedup_near_verified",
-    "dedup_survivors",
-    "dedup_survivors_star",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_near",
-    "text_containment",
-    "sim_ann_lsh",
-    "emb_label_margin",
-    "dedup_embedding",
-    "dedup_semantic_buckets",
-    "dedup_clusters",
-    "sim_cosine_topk",
-    "stream_watermark",
-    "stream_join_outer",
-    # -- oldest-driver-green rotation fill --
-    "filter_cmp",  # last green r9
-    "filter_in",  # last green r9
-    "filter_between",  # last green r9
-    "filter_like",  # last green r9
-    "filter_null",  # last green r9
-    "cond_case",  # last green r9
-    "cast_try",  # last green r9
-    "sort_multi",  # last green r9
-    "limit_topk",  # last green r9
-    "distinct_rows",  # last green r9
-    "project_unpivot",  # last green r9
-    "join_inner",  # last green r9
-    "join_left",  # last green r9
-    "join_right",  # last green r9
-    "join_full",  # last green r9
-    "join_anti",  # last green r9
-    "join_cross",  # last green r9
-    "join_theta",  # last green r9
-    "join_range",  # last green r10
-    "join_agg_revenue_by_nation",  # last green r10
-    "agg_hash",  # last green r10
-    "agg_global",  # last green r10
-    "agg_distinct",  # last green r10
-    "agg_filtered",  # last green r10
-    "agg_cube",  # last green r10
-    "agg_collect",  # last green r10
-    "agg_stats",  # last green r10
-    "events_tumbling",  # last green r10
-    "union_all",  # last green r10
-    "text_langid",  # last green r10
-    "join_bucketed",  # last green r10
-    "fn_struct",  # last green r10
-    "udaf_grouped",  # last green r10
-)
-
-_ROUND15_PRIORITY = (
-    # -- touched since last round boundary (required) --
-    "sim_ann_recall_sweep",
-    "sim_knn_join",
-    "graph_label_propagation",
-    "dedup_communities",
-    "corpus_token_budget",
-    "personalized_pagerank",
-    "graph_pagerank",
-    "text_quality_classifier",
-    "dedup_communities_incremental",
-    "sim_knn_join_ann",
-    "decontaminate_semantic",
-    # -- touched by the r15 optimization pass (bucket-grouped band
-    # emission, array-intersect verify, simhash hash pre-projection,
-    # fan_out_scan honest scan parallelism) --
-    "dedup_minhash_banded",
-    "dedup_near_verified",
-    "dedup_survivors",
-    "dedup_survivors_star",
-    "dedup_simhash",
-    "dedup_incremental",
-    "dedup_ngram_jaccard",
-    "dedup_substring",
-    "dedup_substring_rewrite",
-    "dedup_substring_incremental",
-    "dedup_minhash_lsh",
-    "dedup_near",
-    "text_containment",
-    # -- touched by the r15 optimization sessions 2-3 (prefix-filtered
-    # ngram_jaccard, BLAS/bit-exact-vectorized embedding audits, GEMM
-    # containment, fan_out_scan pass incl. the reverted fn_hash_native
-    # experiment) --
-    "sim_ann_lsh",
-    "emb_label_margin",
-    "dedup_embedding",
-    "dedup_semantic_buckets",
-    "emb_dim_reduce_rp",
-    "text_fingerprint",
-    "text_repetition_filter",
-    "text_quality_composite",
-    "text_token_entropy",
-    "mm_mulaw_energy_real",
-    "fn_hash_native",
-    # -- oldest-driver-green rotation fill --
-    "dq_drift",  # last green r9
-    "dedup_clusters",  # last green r9
-    "mm_image_resize",  # last green r9
-    "mm_audio_feature",  # last green r9
-    "decontaminate_ngram",  # last green r9
-    "decontaminate_bloom",  # last green r9
-    "mm_image_meta",  # last green r9
-    "events_twap",  # last green r9
-    "events_ohlc",  # last green r9
-    "events_resample",  # last green r9
-    "agg_weighted_percentiles",  # last green r9
-    "agg_minmax_by",  # last green r9
-    "scan_parquet",  # last green r9
-    "scan_csv_json",  # last green r9
-    "sink_parquet_part",  # last green r9
-    "filter_cmp",  # last green r9
-    "filter_in",  # last green r9
-    "filter_between",  # last green r9
-    "filter_like",  # last green r9
-    "filter_null",  # last green r9
-    "cond_case",  # last green r9
-    "cast_try",  # last green r9
-    "sort_multi",  # last green r9
-    "limit_topk",  # last green r9
-    "distinct_rows",  # last green r9
-    "project_unpivot",  # last green r9
-    "join_inner",  # last green r9
-    "join_left",  # last green r9
-    "join_right",  # last green r9
-    "join_full",  # last green r9
-    "join_anti",  # last green r9
-    "join_cross",  # last green r9
-    "join_theta",  # last green r9
-    "join_range",  # last green r10
-    "join_agg_revenue_by_nation",  # last green r10
-    "agg_hash",  # last green r10
-    "agg_global",  # last green r10
-    "agg_distinct",  # last green r10
-    "agg_filtered",  # last green r10
-)
-
-_ROUND14_PRIORITY = (
-    # -- touched since last round boundary (required) --
-    "sim_ann_recall_sweep",
-    "sim_knn_join",
-    "graph_label_propagation",
-    "dedup_communities",
-    "corpus_token_budget",
-    # -- oldest-driver-green rotation fill --
-    "sql_q10_returned_items",  # last green r6
-    "sql_q18_large_customers",  # last green r6
-    "events_retention_cohort",  # last green r6
-    "orders_rfm",  # last green r6
-    "win_gap_islands",  # last green r6
-    "sketch_quantiles",  # last green r6
-    "sketch_count_min",  # last green r6
-    "sim_cosine_topk",  # last green r7
-    "sim_knn_query",  # last green r7
-    "vec_norm",  # last green r7
-    "sim_ann_lsh",  # last green r7
-    "emb_label_centroid_dist",  # last green r7
-    "emb_label_margin",  # last green r7
-    "win_rank",  # last green r7
-    "win_lag_lead",  # last green r7
-    "win_first_last",  # last green r7
-    "win_frame_rows",  # last green r7
-    "win_frame_range",  # last green r7
-    "win_topk_group",  # last green r7
-    "win_distribution",  # last green r7
-    "win_running_distinct",  # last green r7
-    "sessionize_batch",  # last green r7
-    "agg_histogram",  # last green r7
-    "agg_mode",  # last green r7
-    "agg_rollup_incremental",  # last green r7
-    "events_session_stats",  # last green r7
-    "events_anomaly_zscore",  # last green r7
-    "orders_market_basket",  # last green r7
-    "parts_abc_pareto",  # last green r7
-    "orders_backlog_aging",  # last green r7
-    "supplier_scorecard",  # last green r7
-    "emb_quantize_int8",  # last green r7
-    "pack_sequences",  # last green r7
-    "sample_cap_per_group",  # last green r7
-    "dq_profile",  # last green r7
-    "dq_constraints",  # last green r7
-    "cdc_snapshot_diff",  # last green r7
-    "dedup_prefix",  # last green r7
-    "dedup_exact",  # last green r7
-    "dedup_ngram_jaccard",  # last green r7
-    "events_funnel",  # last green r7
-    "topk_orders",  # last green r7
-    "stream_dedup",  # last green r9
-    "stream_dedup_wm",  # last green r9
-    "stream_quarantine",  # last green r9
-)
-
-# Round-13 window (VERDICT r12 Next #1/#2/#3 — register the four banked
-# operators, adopt md5_prefix_int in the legacy call sites, rotate the
-# r6 evidence block). Composition, in order (generated by
-# `python scripts/plan_window.py --tuple` at HEAD; the rotation test
-# enforces the touched head):
-#   [head]  the 4 NEW registrations (stream_substring_dedup,
-#           personalized_pagerank, sim_ann_sq8,
-#           dedup_substring_incremental — never driver-checked), the
-#           ADVICE r13 fixes (sample_priority null-safe τ join,
-#           scan_binaryfile crash-safe staging, the rounded rerank tail
-#           → PQ/IVFPQ/SQ8/stream_ann family), and the md5_prefix_int
-#           helper adoption (minhash → dedup banded/survivors family,
-#           hash_bucket/temperature → carving ops, fn_hash, simhash,
-#           pipeline_train_export split keys).
-#   [fill]  the oldest 29 of the 36-query r6 evidence block — the 7
-#           that don't fit (events_retention_cohort, orders_rfm,
-#           sketch_count_min, sketch_quantiles, sql_q10/q18,
-#           win_gap_islands) lead the r14 fill.
-# Entries beyond the 50-slot window keep the prior ordering as a stable
-# tail (the all_queries() loop skips duplicates).
-_ROUND13_PRIORITY = (
-    # -- touched since last round boundary (required) --
-    "sample_priority",
-    "scan_binaryfile",
-    "dedup_survivors",
-    "dedup_near_verified",
-    "dedup_minhash_banded",
-    "dedup_survivors_star",
-    "sim_pq_topk",
-    "sim_ann_ivfpq",
-    "sim_ann_ivfpq_persisted",
-    "stream_ann_ingest",
-    "pipeline_train_export",
-    "fn_hash",
-    "dedup_incremental",
-    "corpus_sample_temperature",
-    "sample_stratified",
-    "dedup_simhash",
-    "split_train_val_test",
-    "personalized_pagerank",
-    "stream_substring_dedup",
-    "dedup_substring_incremental",
-    "sim_ann_sq8",
-    # -- oldest-driver-green rotation fill --
-    "text_repetition_filter",  # last green r6
-    "events_pii_scrub",  # last green r6
-    "emb_dim_reduce_rp",  # last green r6
-    "dedup_semantic_buckets",  # last green r6
-    "text_unigram_lm_score",  # last green r6
-    "text_token_entropy",  # last green r6
-    "events_bot_rate",  # last green r6
-    "text_quality_composite",  # last green r6
-    "pipeline_curation_capstone",  # last green r6
-    "q1_pricing_summary",  # last green r6
-    "join_multiway",  # last green r6
-    "agg_grouping_sets",  # last green r6
-    "stream_session",  # last green r6
-    "sql_q21_sole_blame",  # last green r6
-    "source_stream_replay",  # last green r6
-    "sink_foreach_batch",  # last green r6
-    "stream_tumbling",  # last green r6
-    "stream_sliding",  # last green r6
-    "stream_watermark",  # last green r6
-    "stream_stateful",  # last green r6
-    "stream_static_join",  # last green r6
-    "stream_stream_join",  # last green r6
-    "stream_sink_parquet",  # last green r6
-    "stream_join_outer",  # last green r6
-    "stream_session_dynamic",  # last green r6
-    "stream_update_mode",  # last green r6
-    "sql_q3_shipping_priority",  # last green r6
-    "sql_q6_forecast_revenue",  # last green r6
-    "sql_q7_volume_shipping",  # last green r6
-)
-
-# Round-12 window (VERDICT r11 Next #1/#3 — front the ANN-criterion and
-# star-emitter work, drain the r4 evidence tail). Composition, in order
-# (generated by `python scripts/plan_window.py --tuple` at HEAD; the
-# rotation test enforces the touched head):
-#   [head]  the 11 lake/MV queries (mv._route_refresh two-regime router,
-#           lake vacuum OSError guards + version_at ts cache), the
-#           dedup family (hybrid star emitter: band-rotated SNM +
-#           sub-cap all-pairs; audit_only sweep), and the ANN family
-#           (ivf_index unit-vector training + ivf_probe IP ranking,
-#           ivfpq zero-norm guards + try/finally unpersist).
-#   [fill]  the ENTIRE remaining r4 tail (15) — after this window no
-#           query's latest driver evidence predates r6. The four r12
-#           registrations (mm_ppm_resize_real / mm_mulaw_energy_real,
-#           text_chunk_overlap, fn_url) and the SEVEN continuation-
-#           session registrations (dedup_substring +
-#           dedup_substring_rewrite, graph_pagerank,
-#           text_quality_classifier, text_pii_extract, sample_priority,
-#           scan_binaryfile — never driver-checked) lead the head,
-#           filling the window to exactly 50 (35 touched/new + 15 r4;
-#           the r6 fill block dropped out to make room — every r6 entry
-#           already has driver evidence within the freshness bar).
-# Entries beyond the 50-slot window keep the prior ordering as a stable
-# tail (the all_queries() loop skips duplicates).
-_ROUND12_PRIORITY = (
-    "dedup_substring",
-    "dedup_substring_rewrite",
-    "graph_pagerank",
-    "text_quality_classifier",
-    "text_pii_extract",
-    "sample_priority",
-    "scan_binaryfile",
-    "stream_upsert_merge",
-    "maintenance_compact",
-    "lake_cdc_apply",
-    "lake_incremental_mv",
-    "lake_zorder_skip",
-    "lake_compact_small",
-    "stream_lake_mv",
-    "lake_merge_into",
-    "lake_constraints_restore",
-    "lake_update_delete",
-    "stream_lake_cdc",
-    "dedup_survivors",
-    "dedup_near_verified",
-    "dedup_minhash_banded",
-    "dedup_survivors_star",
-    "sim_pq_topk",
-    "sim_ann_ivfpq",
-    "sim_ann_ivfpq_persisted",
-    "stream_ann_ingest",
-    "sim_ann_ivf_persisted",
-    "sim_ann_ivf",
-    "dedup_near",
-    "dedup_minhash_lsh",
-    "dedup_embedding",
-    "mm_ppm_resize_real",
-    "mm_mulaw_energy_real",
-    "text_chunk_overlap",
-    "fn_url",
-    "sql_q22_dormant_value",  # last green r4
-    "pipeline_train_export",  # last green r4
-    "text_canonicalize",  # last green r4
-    "agg_percentiles_exact",  # last green r4
-    "sink_scan_orc",  # last green r4
-    "scan_schema_evolution",  # last green r4
-    "sink_range_partitioned",  # last green r4
-    "scan_csv_corrupt",  # last green r4
-    "join_interval_chunked",  # last green r4
-    "join_asof_tolerance",  # last green r4
-    "sketch_hll_merge",  # last green r4
-    "fn_datetime_arith",  # last green r4
-    "project",  # last green r4
-    "join_semi",  # last green r4
-    "agg_pivot",  # last green r4
-    "text_repetition_filter",  # last green r6
-    "events_pii_scrub",  # last green r6
-    "emb_dim_reduce_rp",  # last green r6
-    "dedup_semantic_buckets",  # last green r6
-    "text_unigram_lm_score",  # last green r6
-    "text_token_entropy",  # last green r6
-    "events_bot_rate",  # last green r6
-)
-
-# Round-11 window (VERDICT r10 Next #1/#2 — register + front the star
-# dedup leg, drain the r3 staleness tail). Composition, in order
-# (generated by `python scripts/plan_window.py --tuple` at HEAD; the
-# rotation test enforces the touched head):
-#   [head]  the 11 lake/MV queries (lake.py ADVICE r10 fixes: pinned
-#           read_point version, in-commit timestamps, streamed blooms,
-#           safe vacuum default, cache validation), the 4 dedup-family
-#           queries the star/pairs helper extraction touched (incl. the
-#           NEW dedup_survivors_star), sim_pq_topk (sampled codebook
-#           training), and the NEW sim_ann_ivfpq family + stream_ann_ingest (never driver-checked).
-#   [fill]  the ENTIRE r3-stale tail (21), then the r4 block head (10)
-#           — after this window no query's latest driver evidence
-#           predates r4 except the remaining r4 block itself.
-# Entries beyond the 50-slot window keep the prior ordering as a stable
-# tail (the all_queries() loop skips duplicates).
-_ROUND11_PRIORITY = (
-    # -- touched since last round boundary (required) --
-    "stream_upsert_merge",
-    "maintenance_compact",
-    "lake_cdc_apply",
-    "lake_incremental_mv",
-    "lake_zorder_skip",
-    "lake_compact_small",
-    "stream_lake_mv",
-    "lake_merge_into",
-    "lake_constraints_restore",
-    "lake_update_delete",
-    "stream_lake_cdc",
-    "dedup_survivors",
-    "dedup_near_verified",
-    "dedup_minhash_banded",
-    "dedup_survivors_star",
-    "sim_pq_topk",
-    "sim_ann_ivfpq",
-    "sim_ann_ivfpq_persisted",
-    "stream_ann_ingest",
-    # -- oldest-driver-green rotation fill --
-    "sketch_bloom",  # last green r3
-    "sql_exists_subquery",  # last green r3
-    "sql_scalar_subquery",  # last green r3
-    "union_distinct",  # last green r3
-    "intersect",  # last green r3
-    "intersect_all",  # last green r3
-    "except_distinct",  # last green r3
-    "except",  # last green r3
-    "except_all",  # last green r3
-    "fn_array",  # last green r3
-    "text_tokenize",  # last green r3
-    "mm_binary",  # last green r3
-    "fn_hash_native",  # last green r3
-    "sql_q8_market_share",  # last green r3
-    "sql_q14_promo_effect",  # last green r3
-    "text_tfidf_top_terms",  # last green r3
-    "text_bpe_token_count",  # last green r3
-    "text_containment",  # last green r3
-    "join_asof_nearest",  # last green r3
-    "join_dpp_partitioned",  # last green r3
-    "join_asof",  # last green r3
-    "scan_parquet_ns",  # last green r3
-    "sql_q2_min_cost_supplier",  # last green r4
-    "sql_q9_product_profit",  # last green r4
-    "sql_q11_important_parts",  # last green r4
-    "sql_q12_ship_latency",  # last green r4
-    "sql_q13_order_distribution",  # last green r4
-    "sql_q15_top_supplier",  # last green r4
-    "sql_q16_supplier_part_counts",  # last green r4
-    "sql_q19_disjunctive_ranges",  # last green r4
-    "sql_q20_promo_concentration",  # last green r4
-)
-
-# Round-10 window (VERDICT r9 Next #1 — empty the ≤r2 staleness ledger).
-# Composition, in order (generated by `python scripts/plan_window.py
-# --tuple` at HEAD; the rotation test enforces the touched head):
-#   [head]  the 11 queries whose backing code round 10 touched — the
-#           lake/MV family (ADVICE r9 fixes: merge_into NULL legs,
-#           merge_upsert bucket-meta carry, MV null-safe merge + non-null
-#           counters, zorder long arithmetic; manifest v2 delta encoding
-#           + parquet checkpoints; MV refresh auto-router).
-#   [fill]  ALL 11 r1-stale queries the r9 window displaced, then the
-#           complete r2 tail (28) — after this window no query's latest
-#           driver evidence predates r3.
-# Entries beyond the 50-slot window keep the round-8/7 ordering as a
-# stable tail (the all_queries() loop skips duplicates).
-_ROUND10_PRIORITY = (
-    # -- touched since last round boundary (required) --
-    "stream_upsert_merge",
-    "maintenance_compact",
-    "lake_cdc_apply",
-    "lake_incremental_mv",
-    "lake_zorder_skip",
-    "lake_compact_small",
-    "stream_lake_mv",
-    "lake_merge_into",
-    "lake_constraints_restore",
-    "lake_update_delete",
-    "stream_lake_cdc",
-    # -- oldest-driver-green rotation fill --
-    "join_range",  # last green r1
-    "join_agg_revenue_by_nation",  # last green r1
-    "agg_hash",  # last green r1
-    "agg_global",  # last green r1
-    "agg_distinct",  # last green r1
-    "agg_filtered",  # last green r1
-    "agg_cube",  # last green r1
-    "agg_collect",  # last green r1
-    "agg_stats",  # last green r1
-    "events_tumbling",  # last green r1
-    "union_all",  # last green r1
-    "text_langid",  # last green r2
-    "text_fingerprint",  # last green r2
-    "join_bucketed",  # last green r2
-    "fn_struct",  # last green r2
-    "udaf_grouped",  # last green r2
-    "agg_approx_distinct",  # last green r2
-    "join_skew_salted",  # last green r2
-    "sql_q5_local_supplier_volume",  # last green r2
-    "fn_string",  # last green r2
-    "fn_date",  # last green r2
-    "fn_math",  # last green r2
-    "fn_array_explode",  # last green r2
-    "fn_map",  # last green r2
-    "fn_json",  # last green r2
-    "fn_hash",  # last green r2
-    "fn_bitwise",  # last green r2
-    "udf_scalar",  # last green r2
-    "udtf_grouped_map",  # last green r2
-    "udtf_map",  # last green r2
-    "text_token_stats",  # last green r2
-    "text_quality",  # last green r2
-    "text_lang_stats",  # last green r2
-    "mm_frame_sample",  # last green r2
-    "pipeline_corpus_preprocess",  # last green r2
-    "pipeline_sensory_ingest",  # last green r2
-    "nested_struct_stored",  # last green r2
-    "nested_map_stored",  # last green r2
-    "nested_null_stored",  # last green r2
-)
-
-# Round-8 window (VERDICT r7 Next #1 — execute the staleness ledger's r8
-# slice). Composition, in order:
-#   [head]  queries whose backing code is touched IN round 8, at the
-#           function granularity tests/test_window_rotation.py now
-#           enforces (manifest-commit protocol under stream_upsert_merge
-#           / maintenance_compact, streaming api faces, mm codec hook,
-#           IVF persistence, dedup_pipeline routing, decontaminate /
-#           dq_drift / union-find ADVICE fixes). Regenerate with
-#           `python scripts/plan_window.py --tuple` after any refactor —
-#           the rotation test fails if this head goes stale.
-#   [fill]  the NOTES.md "Registry staleness ledger" r8 slice, oldest
-#           driver-green first: all 33 r1-stale queries, then the r2
-#           head as slots allow (displaced r2 items move to the r9
-#           slice).
-# Entries beyond the 50-slot window keep the round-7 ordering as a
-# stable tail (the all_queries() loop skips duplicates).
-_ROUND8_PRIORITY = (
-    # -- touched since last round boundary (required) --
-    "stream_upsert_merge",
-    "maintenance_compact",
-    "stream_dedup",
-    "stream_dedup_wm",
-    "stream_quarantine",
-    "dq_drift",
-    "dedup_survivors",
-    "dedup_clusters",
-    "mm_image_resize",
-    "mm_audio_feature",
-    "decontaminate_ngram",
-    "decontaminate_bloom",
-    "sim_ann_ivf_persisted",
-    "mm_image_meta",
-    # -- round 9 additions (no CORRECTNESS_r08 was recorded — the r8
-    # boundary commit never landed — so the r8 window composition stays
-    # live and new queries join its touched head; regenerated with
-    # scripts/plan_window.py --tuple) --
-    "lake_cdc_apply",
-    "lake_incremental_mv",
-    "lake_zorder_skip",
-    "events_twap",
-    "lake_compact_small",
-    "stream_lake_mv",
-    "lake_merge_into",
-    "events_ohlc",
-    "events_resample",
-    "lake_constraints_restore",
-    "lake_update_delete",
-    "sim_pq_topk",
-    "stream_lake_cdc",
-    "agg_weighted_percentiles",
-    # -- oldest-driver-green rotation fill --
-    "agg_minmax_by",  # last green r1
-    "scan_parquet",  # last green r1
-    "scan_csv_json",  # last green r1
-    "sink_parquet_part",  # last green r1
-    "filter_cmp",  # last green r1
-    "filter_in",  # last green r1
-    "filter_between",  # last green r1
-    "filter_like",  # last green r1
-    "filter_null",  # last green r1
-    "cond_case",  # last green r1
-    "cast_try",  # last green r1
-    "sort_multi",  # last green r1
-    "limit_topk",  # last green r1
-    "distinct_rows",  # last green r1
-    "project_unpivot",  # last green r1
-    "join_inner",  # last green r1
-    "join_left",  # last green r1
-    "join_right",  # last green r1
-    "join_full",  # last green r1
-    "join_anti",  # last green r1
-    "join_cross",  # last green r1
-    "join_theta",  # last green r1
-    "join_range",  # last green r1
-    "join_agg_revenue_by_nation",  # last green r1
-    "agg_hash",  # last green r1
-    "agg_global",  # last green r1
-    "agg_distinct",  # last green r1
-    "agg_filtered",  # last green r1
-    "agg_cube",  # last green r1
-    "agg_collect",  # last green r1
-    "agg_stats",  # last green r1
-    "events_tumbling",  # last green r1
-    "union_all",  # last green r1
-    "text_langid",  # last green r2
-    "text_fingerprint",  # last green r2
-    "join_bucketed",  # last green r2
-    "fn_struct",  # last green r2
-)
-
-# Round-7 window (VERDICT r6 Next #1 — the rotation task r5 planned and
-# r6 failed to execute). Composition, in order:
-#   [1-30]  the 30 queries whose backing module was refactored in round 6
-#           AFTER their last driver row (VERDICT r6 "What's missing #1"
-#           names the full list): similarity (7, llm/similarity.py,
-#           commit 44710bb), windows (9, operators/windows.py, 44710bb),
-#           analytics (9, operators/analytics.py, 44710bb — the other 4
-#           analytics queries sat in the r6 window and so already carry
-#           post-refactor rows), corpus (3, llm/corpus.py), sampling
-#           (2, operators/sampling.py + api.py carving work, 31b7231).
-#   [31-49] queries whose backing code is touched IN round 7: the
-#           dq/maintenance families gaining df-level API twins (VERDICT
-#           r6 Next #4) plus the NEW dq_drift / sample_cap_per_group /
-#           dedup_survivors operators, the ENTIRE llm/dedup.py registry
-#           (the module hosts the new connected-components/keep-one API
-#           seam, so every query it defines goes stale together — the
-#           module granularity the staleness ledger uses), and the
-#           registered queries backed by the api.py functions fixed per
-#           ADVICE r6 (funnel '_t' collision -> events_funnel;
-#           hash_split zero-weight -> split_train_val_test).
-#   [50]    oldest-green rotation: one round-1-stale sentinel (see
-#           NOTES.md "driver-window rotation schedule" for the r8/r9
-#           slices covering the rest of the r1-r3 backlog the
-#           touched-family fronting displaced).
-# Pre-validated with scripts/simulate_window.py; tests/
-# test_window_rotation.py enforces "touched since last round => in
-# window" from git history, so this list can no longer silently rot.
-# Entries 51+ keep the round-5 ordering as a stable tail (the
-# all_queries() loop skips duplicates).
-_ROUND7_PRIORITY = (
-    # -- [1-7] similarity family (llm/similarity.py touched r6) --
-    "sim_cosine_topk",
-    "sim_knn_query",
-    "vec_norm",
-    "sim_ann_lsh",
-    "sim_ann_ivf",
-    "emb_label_centroid_dist",
-    "emb_label_margin",
-    # -- [8-16] windows family (operators/windows.py touched r6) --
-    "win_rank",
-    "win_lag_lead",
-    "win_first_last",
-    "win_frame_rows",
-    "win_frame_range",
-    "win_topk_group",
-    "win_distribution",
-    "win_running_distinct",
-    "sessionize_batch",
-    # -- [17-25] analytics family (operators/analytics.py touched r6) --
-    "agg_histogram",
-    "agg_mode",
-    "agg_rollup_incremental",
-    "events_session_stats",
-    "events_anomaly_zscore",
-    "orders_market_basket",
-    "parts_abc_pareto",
-    "orders_backlog_aging",
-    "supplier_scorecard",
-    # -- [26-28] corpus family (llm/corpus.py touched r6) --
-    "dedup_incremental",
-    "corpus_sample_temperature",
-    "emb_quantize_int8",
-    # -- [29-31] sampling family (operators/sampling.py + api touched
-    # r6; sample_cap_per_group is NEW in r7) --
-    "sample_stratified",
-    "pack_sequences",
-    "sample_cap_per_group",
-    # -- [31-47] round-7-touched: df-level API extension + ADVICE fixes --
-    "dq_profile",
-    "dq_constraints",
-    "dq_drift",
-    "maintenance_compact",
-    "cdc_snapshot_diff",
-    "dedup_survivors",
-    "dedup_clusters",
-    "dedup_near_verified",
-    "dedup_minhash_banded",
-    "dedup_prefix",
-    "dedup_exact",
-    "dedup_near",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_embedding",
-    "events_funnel",
-    "split_train_val_test",
-    # -- [50] oldest-green rotation (last driver row: round 1;
-    # filter_cmp and join_inner fell to the r8 slice when
-    # sample_cap_per_group and dq_drift took their slots) --
-    "topk_orders",
-    # ---- 51+: stable tail (round-5 ordering; duplicates skipped) ----
-    # -- [1-5] curation ops newly wired into the registry --
-    "decontaminate_ngram",
-    "text_repetition_filter",
-    "events_pii_scrub",
-    "emb_dim_reduce_rp",
-    "dedup_semantic_buckets",
-    # -- [6-14] operators written this round (first driver exposure) --
-    "text_unigram_lm_score",
-    "text_token_entropy",
-    "dedup_prefix",
-    "decontaminate_bloom",
-    "events_bot_rate",
-    "mm_audio_feature",
-    "text_quality_composite",
-    "mm_image_resize",
-    "pipeline_curation_capstone",
-    # -- rotating proven-core sentinels (round-5 set) --
-    "q1_pricing_summary",
-    "join_multiway",
-    "agg_grouping_sets",
-    "stream_session",
-    "sql_q21_sole_blame",
-    "dedup_near_verified",
-    "split_train_val_test",
-    # -- [13-28] streaming surface (harness code touched this round) --
-    "source_stream_replay",
-    "sink_foreach_batch",
-    "stream_tumbling",
-    "stream_sliding",
-    "stream_watermark",
-    "stream_dedup",
-    "stream_stateful",
-    "stream_static_join",
-    "stream_stream_join",
-    "stream_quarantine",
-    "stream_dedup_wm",
-    "stream_sink_parquet",
-    "stream_join_outer",
-    "stream_session_dynamic",
-    "stream_upsert_merge",
-    "stream_update_mode",
-    # -- [29-50] oldest-green proven-core rotation --
-    "sql_q3_shipping_priority",
-    "sql_q6_forecast_revenue",
-    "sql_q7_volume_shipping",
-    "sql_q10_returned_items",
-    "sql_q18_large_customers",
-    "events_retention_cohort",
-    "events_funnel",
-    "orders_rfm",
-    "win_gap_islands",
-    "sketch_quantiles",
-    "sketch_count_min",
-    "dedup_clusters",
-    "dedup_minhash_banded",
-    "text_langid",
-    "text_fingerprint",
-    "mm_image_meta",
-    "pack_sequences",
-    "join_bucketed",
-    "fn_struct",
-    "udaf_grouped",
-    "agg_minmax_by",
-    "win_frame_rows",
-    # -- 51+: the round-4 window (all driver-green in r4), then
-    # everything else in earlier-round ordering --
-    "sql_q2_min_cost_supplier",
-    "sql_q9_product_profit",
-    "sql_q11_important_parts",
-    "sql_q12_ship_latency",
-    "sql_q13_order_distribution",
-    "sql_q15_top_supplier",
-    "sql_q16_supplier_part_counts",
-    "sql_q19_disjunctive_ranges",
-    "sql_q20_promo_concentration",
-    "sql_q22_dormant_value",
-    "pipeline_train_export",
-    "dedup_incremental",
-    "corpus_sample_temperature",
-    "emb_quantize_int8",
-    "emb_label_margin",
-    "text_canonicalize",
-    "win_distribution",
-    "win_running_distinct",
-    "events_anomaly_zscore",
-    "orders_market_basket",
-    "parts_abc_pareto",
-    "orders_backlog_aging",
-    "supplier_scorecard",
-    "agg_percentiles_exact",
-    "sink_scan_orc",
-    "scan_schema_evolution",
-    "sink_range_partitioned",
-    "scan_csv_corrupt",
-    "maintenance_compact",
-    "cdc_snapshot_diff",
-    "dq_profile",
-    "dq_constraints",
-    "join_interval_chunked",
-    "join_asof_tolerance",
-    "sketch_hll_merge",
-    "fn_datetime_arith",
-    "dedup_near",
-    "project",
-    "join_semi",
-    "agg_pivot",
-    "win_topk_group",
-    "dedup_exact",
-    "sim_cosine_topk",
-    "sample_stratified",
-    "sketch_bloom",
-    "sql_exists_subquery",
-    "sql_scalar_subquery",
-    "union_distinct",
-    "intersect",
-    "intersect_all",
-    "except_distinct",
-    "except",
-    "except_all",
-    "fn_array",
-    "text_tokenize",
-    "mm_binary",
-    "fn_hash_native",
-    "dedup_minhash_lsh",
-    "sim_ann_lsh",
-    "sim_ann_ivf",
-    "sql_q8_market_share",
-    "sql_q14_promo_effect",
-    "agg_histogram",
-    "agg_mode",
-    "events_session_stats",
-    "agg_rollup_incremental",
-    "text_tfidf_top_terms",
-    "text_bpe_token_count",
-    "text_containment",
-    "emb_label_centroid_dist",
-    "join_asof_nearest",
-    "join_dpp_partitioned",
-    "join_asof",
-    "win_frame_range",
-    "scan_parquet_ns",
-    "sessionize_batch",
-    "agg_approx_distinct",
-    "join_skew_salted",
-    "sql_q5_local_supplier_volume",
-    "fn_string",
-    "fn_date",
-    "fn_math",
-    "fn_array_explode",
-    "fn_map",
-    "fn_json",
-    "fn_hash",
-    "fn_bitwise",
-    "udf_scalar",
-    "udtf_grouped_map",
-    "udtf_map",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_embedding",
-    "sim_knn_query",
-    "vec_norm",
-    "text_token_stats",
-    "text_quality",
-    "text_lang_stats",
-    "mm_frame_sample",
-    "pipeline_corpus_preprocess",
-    "pipeline_sensory_ingest",
-    "nested_struct_stored",
-    "nested_map_stored",
-    "nested_null_stored",
+    # oldest driver-green fill
+    "agg_approx_distinct",  # last green r10
+    "join_skew_salted",  # last green r10
+    "fn_string",  # last green r10
+    "fn_date",  # last green r10
+    "fn_math",  # last green r10
+    "fn_array_explode",  # last green r10
+    "fn_map",  # last green r10
+    "fn_json",  # last green r10
+    "fn_bitwise",  # last green r10
+    "udf_scalar",  # last green r10
+    "udtf_grouped_map",  # last green r10
+    "udtf_map",  # last green r10
+    "text_token_stats",  # last green r10
+    "text_quality",  # last green r10
+    "text_lang_stats",  # last green r10
 )
 
 
 def all_queries() -> dict[str, QuerySpec]:
     """Import every operator module (side effect: registration) and return
-    the full registry, reordered so the driver's 50-query correctness
-    window covers refactor-touched and oldest-verified operators first
-    (see _LAKE_INGEST_PRIORITY, _SQL_BINDING_PRIORITY and
-    _ROUND16_PRIORITY; the earlier round tuples are the stable tail). Keys are the SURVEY.md §2 operator IDs."""
+    the full registry: the _DRIVER_WINDOW names first, then every other
+    query in registration order. Keys are the SURVEY.md §2 operator IDs."""
     import importlib
 
     for mod in _OPERATOR_MODULES:
         importlib.import_module(mod)
-    ordered: dict[str, QuerySpec] = {}
-    for name in (
-        *_LAKE_INGEST_PRIORITY,
-        *_SQL_BINDING_PRIORITY,
-        *_ROUND16_PRIORITY,
-        *_ROUND15_PRIORITY,
-        *_ROUND14_PRIORITY,
-        *_ROUND13_PRIORITY,
-        *_ROUND12_PRIORITY,
-        *_ROUND11_PRIORITY,
-        *_ROUND10_PRIORITY,
-        *_ROUND8_PRIORITY,
-        *_ROUND7_PRIORITY,
-    ):
-        if name in QUERIES:
-            ordered[name] = QUERIES[name]
+    ordered = {name: QUERIES[name] for name in _DRIVER_WINDOW if name in QUERIES}
     for name, spec in QUERIES.items():
         if name not in ordered:
             ordered[name] = spec

@@ -229,6 +229,16 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` if set, else half the host's physical
+    RAM capped at 16g: a 16g heap on a 16 GiB host gets OOM-killed."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mib)}m"
+
+
 def get_session(
     app_name: str = "dicebox-sensorybatchprocessor-spark",
     master: str | None = None,
@@ -263,7 +273,7 @@ def get_session(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "true")
         # keep catalog metadata (bucketed-table entries) out of the repo cwd

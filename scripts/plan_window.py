@@ -1,21 +1,25 @@
 #!/usr/bin/env python
-"""Generate the next round's driver-window priority ordering.
+"""Generate the driver window, ``_DRIVER_WINDOW`` in the package
+``__init__.py``.
 
 The window contract (see tests/test_window_rotation.py): every query
 whose backing module — or underlying api.py function — changed since the
 last ``round N:`` boundary commit must sit inside the first
 ``DRIVER_WINDOW`` registry slots; remaining slots go to the queries with
-the OLDEST last driver-green CORRECTNESS row. Hand-maintaining that
-ordering is exactly what round 6 forgot to do; this script derives it:
+the OLDEST last driver-green CORRECTNESS row. To regenerate the window,
+paste the tuple this script prints over the old one:
 
     python scripts/plan_window.py            # print the plan
-    python scripts/plan_window.py --tuple    # ready-to-paste python tuple
+    python scripts/plan_window.py --tuple    # ready-to-paste _DRIVER_WINDOW
 
 Output sections:
   touched   — queries the rotation test will REQUIRE in the window
-  backlog   — oldest-green fill, in rotation order, up to DRIVER_WINDOW
-  overflow  — touched queries that do NOT fit (window math broken: split
-              the refactor across rounds or grow nothing else)
+  fill      — oldest-green fill, in rotation order, up to DRIVER_WINDOW
+  overflow  — touched queries that do NOT fit (the rotation test fails;
+              exit status 1)
+
+The summary line reports ``free`` = window − touched, the slots a change
+may still spend on touched queries before the window overflows.
 
 The generator reuses the same git/module/api mapping as the enforcing
 test, so "plan_window says it fits" and "the test passes" cannot drift
@@ -62,8 +66,6 @@ def last_green_rounds() -> dict[str, int]:
 
 def main() -> None:
     import importlib
-    import inspect
-    from pathlib import Path
 
     eng = importlib.import_module(PKG)
     queries = eng.all_queries()
@@ -86,16 +88,17 @@ def main() -> None:
     fill = backlog[: max(0, window_n - len(in_window_touched))]
 
     print(f"# boundary: {boundary[:9] if boundary else 'none'}; "
-          f"window={window_n}; touched={len(touched)}; fill={len(fill)}")
+          f"window={window_n}; touched={len(touched)}; fill={len(fill)}; "
+          f"free={window_n - len(touched)}")
     if overflow:
         print(f"# !! OVERFLOW ({len(overflow)}): {overflow}")
-        print("# split the refactor across rounds — the rotation test WILL fail")
+        print("# split the change — the rotation test WILL fail")
     if "--tuple" in sys.argv:
-        print("_ROUND_NEXT_PRIORITY = (")
-        print("    # -- touched since last round boundary (required) --")
+        print("_DRIVER_WINDOW = (")
+        print("    # touched since the last `round N:` commit (required)")
         for n in in_window_touched:
             print(f'    "{n}",')
-        print("    # -- oldest-driver-green rotation fill --")
+        print("    # oldest driver-green fill")
         for n in fill:
             print(f'    "{n}",  # last green r{last.get(n, 0)}')
         print(")")
@@ -106,6 +109,7 @@ def main() -> None:
         print("fill (oldest green first):")
         for n in fill:
             print(f"  {n}  (last green r{last.get(n, 0)})")
+    sys.exit(1 if overflow else 0)
 
 
 if __name__ == "__main__":

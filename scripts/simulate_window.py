@@ -2,7 +2,8 @@
 """Simulate the driver's CORRECTNESS gate before the driver runs it:
 first N (default 50) registered queries, one vanilla SparkSession (NOT
 the engine's get_session — exercises the runtime ensure_engine_conf
-path), registration order, strict oracle compare at sf0.01. A clean run
+path) on ``local[$SPARK_GRAFT_CPUS]`` (else ``local[*]``), registration
+order, strict oracle compare at sf0.01. A clean run
 here predicts a clean CORRECTNESS_r{N}.json.
 
 Usage:  python scripts/simulate_window.py [n_queries] [sf_dir]
@@ -23,7 +24,9 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.master("local[32]").getOrCreate()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    master = f"local[{cpus}]" if cpus else "local[*]"
+    spark = SparkSession.builder.master(master).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as contract

@@ -96,3 +96,28 @@ def test_advisory_partition_size_env_overridable():
         capture_output=True, text=True, check=True,
     )
     assert out.stdout.strip() == "4m"  # the measured local default
+
+
+def _fake_host(monkeypatch, gib: float) -> None:
+    page = 4096
+    pages = int(gib * 2**30) // page
+    monkeypatch.setattr(
+        sess.os, "sysconf", {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": pages}.__getitem__
+    )
+
+
+@pytest.mark.parametrize(
+    "host_gib, expected",
+    [(15.7, "8038m"), (64, "16384m")],  # half the RAM; the 16g cap
+)
+def test_driver_memory_is_half_the_host_capped_at_16g(monkeypatch, host_gib, expected):
+    """A 16g heap on a 15.7 GiB host was OOM-killed."""
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    _fake_host(monkeypatch, host_gib)
+    assert sess._driver_memory() == expected
+
+
+def test_driver_memory_env_override_wins(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "4g")
+    _fake_host(monkeypatch, 15.7)
+    assert sess._driver_memory() == "4g"

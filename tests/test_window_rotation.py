@@ -3,9 +3,10 @@
 The driver's correctness harness re-checks only the FIRST
 ``DRIVER_WINDOW`` registered queries each round, so any query whose
 backing code changed after its last driver row carries stale external
-evidence until it rotates back into the window. Rounds 5 and 6 both
-planned that rotation in a hand-maintained tuple; round 6 forgot to
-execute it. This test turns the plan into a red/green invariant:
+evidence until it rotates back into the window. The window is the one
+tuple ``_DRIVER_WINDOW`` in the package ``__init__.py``; regenerate it
+with ``scripts/plan_window.py --tuple``. This test turns the rotation
+into a red/green invariant:
 
     every registered query whose backing CODE — the query function
     itself, or any top-level function it (transitively) calls that
@@ -323,5 +324,18 @@ def test_touched_queries_are_inside_driver_window() -> None:
     assert not stragglers, (
         f"{len(stragglers)} queries touched since round boundary "
         f"{boundary[:9]} are OUTSIDE the first {eng.DRIVER_WINDOW} driver "
-        f"slots — front them in the priority tuple: {stragglers}"
+        f"slots — regenerate _DRIVER_WINDOW with scripts/plan_window.py "
+        f"--tuple: {stragglers}"
     )
+
+
+def test_driver_window_is_the_one_tuple() -> None:
+    """``all_queries()`` leads with ``_DRIVER_WINDOW``: exactly one window
+    long, no duplicates, only registered names."""
+    eng = importlib.import_module(PKG)
+    queries = eng.all_queries()
+    window = eng._DRIVER_WINDOW
+    assert len(window) == eng.DRIVER_WINDOW
+    assert len(set(window)) == len(window), "duplicate names in _DRIVER_WINDOW"
+    assert set(window) <= set(queries), set(window) - set(queries)
+    assert list(queries)[: eng.DRIVER_WINDOW] == list(window)
