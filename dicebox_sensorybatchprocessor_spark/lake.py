@@ -56,6 +56,13 @@ so no schema-inference job runs — partition pruning, filter pushdown,
 and column pruning behave exactly as on a directory scan, and the file
 list itself enables the next-level optimization (data skipping by
 per-file stats) that a bare directory listing cannot.
+
+One write path: every write verb (append, merges, UPDATE/DELETE, the
+compactions, the Bloom-index commit, and a materialized view's refresh)
+is a step function that names the live files it replaces and the rows
+that replace them. ``ManifestTable._write`` owns the rest: the retry on
+:class:`CommitConflict`, the ``txn`` exactly-once skip, staging in the
+table's bucket shape, and carrying the zone-map columns forward.
 """
 
 from __future__ import annotations
@@ -66,6 +73,8 @@ import os
 import tempfile
 import time
 import uuid
+from collections import Counter
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -215,6 +224,30 @@ def _bloom_parents(manifest: dict, base_snap: dict, base_blooms: dict) -> dict:
 
 class CommitConflict(RuntimeError):
     """Another writer published the version this commit targeted."""
+
+
+class _Rewrite(NamedTuple):
+    """One attempt of a write verb, planned against a snapshot: the live
+    files it replaces and what replaces them."""
+
+    drop: list[str]
+    # rows to stage in the table's shape, files already staged, or None
+    # for a commit that adds no file
+    rows: DataFrame | list[str] | None = None
+    n_files: int | None = None  # file count for unbucketed rows
+    meta: dict | None = None  # extra manifest metadata
+    info: dict | None = None  # the verb's own ledger fields
+
+
+def _carried(snap: dict, extra: dict | None = None, stat_cols=()) -> dict:
+    """commit() arguments that carry ``snap``'s bucket shape and zone-map
+    columns into the next version, with ``extra`` metadata on top;
+    ``stat_cols`` apply only where the snapshot records none."""
+    meta = {
+        k: snap[k] for k in ("n_buckets", "bucket_keys", "file_buckets") if k in snap
+    }
+    meta.update(extra or {})
+    return dict(bucket_meta=meta, stat_cols=tuple(snap.get("stat_cols") or stat_cols))
 
 
 def _bucket_of(key_cols: tuple[str, ...], n_buckets: int):
@@ -746,18 +779,7 @@ class ManifestTable:
     def _metadata_commit(self, snap: dict, extra: dict) -> int:
         """Commit the current file set unchanged with updated metadata,
         preserving bucket shape and stat columns."""
-        meta = {
-            k: snap[k]
-            for k in ("n_buckets", "bucket_keys", "file_buckets")
-            if k in snap
-        }
-        meta.update(extra)
-        return self.commit(
-            snap["files"],
-            snap["version"],
-            bucket_meta=meta,
-            stat_cols=tuple(snap.get("stat_cols", ())),
-        )
+        return self.commit(snap["files"], snap["version"], **_carried(snap, extra))
 
     def restore(self, version: int) -> int:
         """RESTORE: make an earlier snapshot current by committing its
@@ -772,21 +794,13 @@ class ManifestTable:
                 raise ValueError(
                     f"cannot restore v{version}: data file {f} was vacuumed"
                 )
-        cur = self.snapshot()
-        meta = {
-            k: old[k]
-            for k in ("n_buckets", "bucket_keys", "file_buckets")
-            if k in old
-        }
         # pin the OLD constraint set (possibly none) — restore reverts
         # metadata too, and commit's carry-forward must not resurrect
         # constraints added after the restored version
-        meta["constraints"] = old.get("constraints", {})
         return self.commit(
             old["files"],
-            cur["version"],
-            bucket_meta=meta,
-            stat_cols=tuple(old.get("stat_cols", ())),
+            self.latest_version(),
+            **_carried(old, {"constraints": old.get("constraints", {})}),
         )
 
     def stage_bucketed(
@@ -1040,6 +1054,63 @@ class ManifestTable:
                 pass
         return next_v
 
+    def _write(
+        self,
+        step,
+        max_retries: int = 5,
+        txn: tuple[str, int] | None = None,
+        key_cols: tuple[str, ...] = (),
+        n_buckets: int | None = None,
+        stat_cols: tuple[str, ...] = (),
+        commit_kw: dict | None = None,
+    ) -> tuple[dict, int, _Rewrite | None, list[str]]:
+        """The optimistic commit every write verb runs. Each attempt
+        resolves the latest snapshot, returns early if it already holds
+        ``txn`` (:meth:`txn_version`), and asks ``step(snap)`` for a
+        :class:`_Rewrite` (None is a no-op). The rewrite's rows stage in
+        the snapshot's shape: a bucketed table through
+        :meth:`stage_bucketed`, its kept files keeping their buckets; an
+        unbucketed one given ``n_buckets`` is bucketed by ``key_cols``;
+        otherwise ``stage(n_files)``. The commit carries the snapshot's
+        stat columns (``stat_cols`` where it has none), and ``commit_kw``
+        override any commit() argument. A :class:`CommitConflict`
+        re-plans against the new snapshot, up to ``max_retries``
+        attempts. Returns (snapshot, version, rewrite, added files); a
+        no-op returns the snapshot's version, None and no files."""
+        for _ in range(max_retries):
+            snap = self.snapshot()
+            if txn is not None and self.txn_version(
+                txn[0], snap["version"]
+            ) >= int(txn[1]):
+                return snap, snap["version"], None, []
+            plan = step(snap)
+            if plan is None:
+                return snap, snap["version"], None, []
+            dropped = set(plan.drop)
+            keep = [f for f in snap["files"] if f not in dropped]
+            kw = _carried(snap, plan.meta, stat_cols)
+            nb = snap.get("n_buckets") or n_buckets
+            if plan.rows is None or isinstance(plan.rows, list):
+                added = list(plan.rows or ())
+            elif nb:
+                keys = list(snap.get("bucket_keys") or key_cols)
+                new_map = self.stage_bucketed(plan.rows, tuple(keys), nb)
+                added = sorted(new_map)
+                kw["bucket_meta"].update(
+                    n_buckets=nb,
+                    bucket_keys=keys,
+                    file_buckets={**snap.get("file_buckets", {}), **new_map},
+                )
+            else:
+                added = self.stage(plan.rows, n_files=plan.n_files)
+            kw.update(commit_kw or {})
+            try:
+                version = self.commit(keep + added, snap["version"], txn=txn, **kw)
+            except CommitConflict:
+                continue
+            return snap, version, plan, added
+        raise CommitConflict(f"gave up after {max_retries} retries")
+
     def overwrite(
         self,
         df: DataFrame,
@@ -1095,14 +1166,13 @@ class ManifestTable:
             files = self.stage(df)
         else:
             files = self.stage(df, n_files=n_files)
-        for _ in range(max_retries):
-            try:
-                return self.commit(
-                    files, self.latest_version(), stat_cols=stat_cols
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up after {max_retries} retries")
+        # blind: every attempt replaces whatever is live with the one
+        # staging, unbucketed and zone-mapped on this call's columns
+        return self._write(
+            lambda snap: _Rewrite(snap["files"], files),
+            max_retries,
+            commit_kw={"bucket_meta": None, "stat_cols": stat_cols},
+        )[1]
 
     def append(
         self,
@@ -1123,36 +1193,9 @@ class ManifestTable:
         replaying writer the exactly-once skip, which appends need even
         more than merges: a replayed append DUPLICATES rows."""
         df = self._validate(df)
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            if txn is not None and int(
-                snap.get("txns", {}).get(txn[0], -1)
-            ) >= int(txn[1]):
-                return snap["version"]
-            if snap.get("n_buckets"):
-                new_map = self.stage_bucketed(
-                    df, tuple(snap["bucket_keys"]), snap["n_buckets"]
-                )
-                files = snap["files"] + sorted(new_map)
-                meta = {
-                    "n_buckets": snap["n_buckets"],
-                    "bucket_keys": snap["bucket_keys"],
-                    "file_buckets": {**snap["file_buckets"], **new_map},
-                }
-            else:
-                files = snap["files"] + self.stage(df, n_files=n_files)
-                meta = None
-            try:
-                return self.commit(
-                    files,
-                    snap["version"],
-                    bucket_meta=meta,
-                    stat_cols=tuple(snap.get("stat_cols", ())),
-                    txn=txn,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up after {max_retries} retries")
+        return self._write(
+            lambda snap: _Rewrite([], df, n_files), max_retries, txn=txn
+        )[1]
 
     # -- data skipping ---------------------------------------------------
     def collect_file_stats(
@@ -1290,25 +1333,11 @@ class ManifestTable:
         column, still manifest-scale next to a 128 MB data file)."""
         if not cols:
             raise ValueError("set_bloom_index needs at least one column")
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            meta = {
-                k: snap[k]
-                for k in ("n_buckets", "bucket_keys", "file_buckets")
-                if k in snap
-            }
-            try:
-                return self.commit(
-                    snap["files"],
-                    snap["version"],
-                    bucket_meta=meta,
-                    stat_cols=tuple(snap.get("stat_cols", ())),
-                    bloom_cols=tuple(cols),
-                    bloom_max_bits=max_bits,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up after {max_retries} retries")
+        return self._write(
+            lambda snap: _Rewrite([]),
+            max_retries,
+            commit_kw={"bloom_cols": tuple(cols), "bloom_max_bits": max_bits},
+        )[1]
 
     def prune_files_point(
         self, col: str, value, version: int | None = None
@@ -1559,46 +1588,29 @@ class ManifestTable:
         interleaved writer's rows — dropping them is the lost-update the
         manifest protocol exists to prevent). Data movement is one scan
         + one round-robin repartition write; no value-keyed shuffle."""
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            n_before, total_bytes = self.file_stats(snap["version"])
+
+        def step(snap: dict) -> _Rewrite:
+            total = sum(self._file_sizes(snap).values())
+            # bucketed tables compact per bucket (one file each) so the
+            # bucket map — and partial-rewrite merges — survive
+            n_out = snap.get("n_buckets") or max(
+                1, math.ceil(total / target_file_bytes)
+            )
             # always schema-merge here: a compaction is exactly the pass
             # that settles an evolved table under its widest schema, and
             # a plain read's schema inference samples files — it could
             # silently drop a column added by schema_evolution merges
             df = self.read(spark, snap["version"], merge_schema=True)
-            if snap.get("n_buckets"):
-                # bucketed tables compact per bucket (one file each) so
-                # the bucket map — and partial-rewrite merges — survive
-                mapping = self.stage_bucketed(
-                    df, tuple(snap["bucket_keys"]), snap["n_buckets"]
-                )
-                files, n_out = sorted(mapping), snap["n_buckets"]
-                meta = {
-                    "n_buckets": snap["n_buckets"],
-                    "bucket_keys": snap["bucket_keys"],
-                    "file_buckets": mapping,
-                }
-            else:
-                n_out = max(1, math.ceil(total_bytes / target_file_bytes))
-                files, meta = self.stage(df, n_files=n_out), None
-            try:
-                version = self.commit(
-                    files,
-                    snap["version"],
-                    bucket_meta=meta,
-                    stat_cols=tuple(snap.get("stat_cols", ())),
-                )
-            except CommitConflict:
-                continue
-            return {
-                "version": version,
-                "n_files_before": n_before,
-                "n_files_after": len(files),
-                "total_bytes": total_bytes,
-                "n_output_files_planned": n_out,
-            }
-        raise CommitConflict(f"gave up after {max_retries} retries")
+            info = {"total_bytes": total, "n_output_files_planned": n_out}
+            return _Rewrite(snap["files"], df, n_out, info=info)
+
+        snap, version, plan, added = self._write(step, max_retries)
+        return {
+            "version": version,
+            "n_files_before": len(snap["files"]),
+            "n_files_after": len(added),
+            **plan.info,
+        }
 
     def compact_small(
         self,
@@ -1625,50 +1637,35 @@ class ManifestTable:
             if small_file_bytes is not None
             else target_file_bytes // 2
         )
-        for _ in range(max_retries):
-            snap = self.snapshot()
+
+        def step(snap: dict) -> _Rewrite | None:
             if snap.get("n_buckets"):
                 raise ValueError(
                     "bucketed tables stay one-file-per-bucket; use compact()"
                 )
             sizes = self._file_sizes(snap)
-            small_files = [f for f in snap["files"] if sizes[f] < small]
-            keep_files = [f for f in snap["files"] if sizes[f] >= small]
-            if len(small_files) < 2:
-                return {
-                    "version": snap["version"],
-                    "n_files_before": len(snap["files"]),
-                    "n_files_after": len(snap["files"]),
-                    "n_files_rewritten": 0,
-                    "n_files_carried": len(snap["files"]),
-                    "bytes_rewritten": 0,
-                    "n_output_files_planned": 0,
-                }
-            bytes_small = sum(sizes[f] for f in small_files)
-            n_out = max(1, math.ceil(bytes_small / target_file_bytes))
+            tail = [f for f in snap["files"] if sizes[f] < small]
+            if len(tail) < 2:
+                return None
+            nbytes = sum(sizes[f] for f in tail)
+            n_out = max(1, math.ceil(nbytes / target_file_bytes))
             # mergeSchema: the small tail may straddle a schema evolution;
             # the packed files settle under the widest schema of the TAIL
             # only — carried files are untouched by contract
-            df = self._scan(spark, small_files, snap["version"], merge_schema=True)
-            new_files = self.stage(df, n_files=n_out)
-            try:
-                version = self.commit(
-                    keep_files + new_files,
-                    snap["version"],
-                    stat_cols=tuple(snap.get("stat_cols", ())),
-                )
-            except CommitConflict:
-                continue
-            return {
-                "version": version,
-                "n_files_before": len(snap["files"]),
-                "n_files_after": len(keep_files) + len(new_files),
-                "n_files_rewritten": len(small_files),
-                "n_files_carried": len(keep_files),
-                "bytes_rewritten": bytes_small,
-                "n_output_files_planned": n_out,
-            }
-        raise CommitConflict(f"gave up after {max_retries} retries")
+            df = self._scan(spark, tail, snap["version"], merge_schema=True)
+            info = {"bytes_rewritten": nbytes, "n_output_files_planned": n_out}
+            return _Rewrite(tail, df, n_out, info=info)
+
+        snap, version, plan, added = self._write(step, max_retries)
+        n, n_tail = len(snap["files"]), len(plan.drop) if plan else 0
+        return {
+            "version": version,
+            "n_files_before": n,
+            "n_files_after": n - n_tail + len(added),
+            "n_files_rewritten": n_tail,
+            "n_files_carried": n - n_tail,
+            **(plan.info if plan else {"bytes_rewritten": 0, "n_output_files_planned": 0}),
+        }
 
     def compact_buckets(
         self, spark: SparkSession, max_retries: int = 5
@@ -1679,48 +1676,25 @@ class ManifestTable:
         byte-identical. Maintenance cost is O(fragmented buckets) —
         :meth:`compact` stays the O(table) pass that also settles an
         evolved schema under one widest footer."""
-        for _ in range(max_retries):
-            snap = self.snapshot()
+
+        def step(snap: dict) -> _Rewrite | None:
             if not snap.get("n_buckets"):
                 raise ValueError("compact_buckets needs a bucketed table")
             fb = snap["file_buckets"]
-            counts: dict[int, int] = {}
-            for b in fb.values():
-                counts[b] = counts.get(b, 0) + 1
-            multi = {b for b, n in counts.items() if n > 1}
+            multi = {b for b, n in Counter(fb.values()).items() if n > 1}
             if not multi:
-                return {
-                    "version": snap["version"],
-                    "n_buckets_rewritten": 0,
-                    "n_files_carried": len(snap["files"]),
-                    "noop": True,
-                }
-            keep = [f for f in snap["files"] if fb[f] not in multi]
+                return None
             rewrite = [f for f in snap["files"] if fb[f] in multi]
             df = self._scan(spark, rewrite, snap["version"])
-            new_map = self.stage_bucketed(
-                df, tuple(snap["bucket_keys"]), snap["n_buckets"]
-            )
-            files = keep + sorted(new_map)
-            meta = {
-                "n_buckets": snap["n_buckets"],
-                "bucket_keys": snap["bucket_keys"],
-                "file_buckets": {**{f: fb[f] for f in keep}, **new_map},
-            }
-            try:
-                version = self.commit(
-                    files, snap["version"], bucket_meta=meta,
-                    stat_cols=tuple(snap.get("stat_cols", ())),
-                )
-            except CommitConflict:
-                continue
-            return {
-                "version": version,
-                "n_buckets_rewritten": len(multi),
-                "n_files_carried": len(keep),
-                "noop": False,
-            }
-        raise CommitConflict(f"gave up after {max_retries} retries")
+            return _Rewrite(rewrite, df, info={"n_buckets_rewritten": len(multi)})
+
+        snap, version, plan, _ = self._write(step, max_retries)
+        return {
+            "version": version,
+            "n_buckets_rewritten": plan.info["n_buckets_rewritten"] if plan else 0,
+            "n_files_carried": len(snap["files"]) - (len(plan.drop) if plan else 0),
+            "noop": plan is None,
+        }
 
     def optimize(
         self,
@@ -1938,82 +1912,48 @@ def merge_upsert(
     change_keys = updates.select(*keys)
     if delete_keys is not None:
         change_keys = change_keys.unionByName(delete_keys.select(*keys))
-    for _ in range(max_retries):
-        snap = table.snapshot()
-        if txn is not None and int(
-            snap.get("txns", {}).get(txn[0], -1)
-        ) >= int(txn[1]):
-            return snap["version"]
-        # ``or`` (not "if files"): a schema-bearing EMPTY bucketed v1
-        # (e.g. cdc_stream's raw.limit(0) seed) has files == [] but real
-        # bucket metadata — dropping it here would silently degrade the
-        # table to unbucketed full-table merges for every later batch.
-        nb = snap.get("n_buckets") or n_buckets
-        if snap.get("n_buckets") and list(snap["bucket_keys"]) != keys:
-            raise ValueError(
-                f"table is bucketed by {snap['bucket_keys']}, merge keyed "
-                f"by {keys} cannot route buckets"
-            )
-        if snap["files"] and snap.get("n_buckets"):
-            fb = snap["file_buckets"]
-            touched = {
-                r["b"]
-                for r in change_keys.select(
-                    _bucket_of(tuple(keys), nb).alias("b")
-                ).distinct().collect()
-            }
-            keep_files = [f for f in snap["files"] if fb[f] not in touched]
-            rewrite_files = [f for f in snap["files"] if fb[f] in touched]
-            if rewrite_files:
-                old = table._scan(
-                    spark, rewrite_files, snap["version"], merge_schema=schema_evolution
-                )
-                merged = old.join(
-                    change_keys, keys, "left_anti"
-                ).unionByName(updates, allowMissingColumns=schema_evolution)
-            else:
-                merged = updates
-            new_map = table.stage_bucketed(merged, tuple(keys), nb)
-            files = keep_files + sorted(new_map)
-            meta = {
-                "n_buckets": nb,
-                "bucket_keys": keys,
-                "file_buckets": {
-                    **{f: fb[f] for f in keep_files},
-                    **new_map,
-                },
-            }
-        else:
-            if snap["files"]:
-                old = table.read(
-                    spark, snap["version"], merge_schema=schema_evolution
-                )
-                merged = old.join(
-                    change_keys, keys, "left_anti"
-                ).unionByName(updates, allowMissingColumns=schema_evolution)
-            else:
-                merged = updates
-            if nb:
-                new_map = table.stage_bucketed(merged, tuple(keys), nb)
-                files = sorted(new_map)
-                meta = {
-                    "n_buckets": nb,
-                    "bucket_keys": keys,
-                    "file_buckets": new_map,
-                }
-            else:
-                files, meta = table.stage(merged), None
-        try:
-            return table.commit(
-                files,
-                snap["version"],
-                bucket_meta=meta,
-                stat_cols=tuple(snap.get("stat_cols") or stat_cols),
-                txn=txn,
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"gave up after {max_retries} retries")
+
+    def step(snap: dict) -> _Rewrite:
+        drop = _keyed_region(snap, keys, change_keys)
+        if not drop:
+            return _Rewrite([], updates)
+        old = table._scan(spark, drop, snap["version"], merge_schema=schema_evolution)
+        merged = old.join(change_keys, keys, "left_anti").unionByName(
+            updates, allowMissingColumns=schema_evolution
+        )
+        return _Rewrite(drop, merged)
+
+    return table._write(
+        step,
+        max_retries,
+        txn=txn,
+        key_cols=tuple(keys),
+        n_buckets=n_buckets,
+        stat_cols=stat_cols,
+    )[1]
+
+
+def _keyed_region(snap: dict, keys: list[str], changes: DataFrame) -> list[str]:
+    """The live files a keyed merge rewrites: on a bucketed table, only
+    the files of the buckets ``changes``' keys hash to; otherwise all.
+    Bucket shape is read from the snapshot, not from its files: a
+    schema-bearing EMPTY bucketed v1 (e.g. cdc_stream's raw.limit(0)
+    seed) still rejects mismatched keys and keeps its bucketing."""
+    if snap.get("n_buckets") and list(snap["bucket_keys"]) != keys:
+        raise ValueError(
+            f"table is bucketed by {snap['bucket_keys']}, merge keyed "
+            f"by {keys} cannot route buckets"
+        )
+    if not (snap["files"] and snap.get("n_buckets")):
+        return snap["files"]
+    hit = {
+        r["b"]
+        for r in changes.select(
+            _bucket_of(tuple(keys), snap["n_buckets"]).alias("b")
+        ).distinct().collect()
+    }
+    fb = snap["file_buckets"]
+    return [f for f in snap["files"] if fb[f] in hit]
 
 
 def merge_apply(
@@ -2212,79 +2152,23 @@ def merge_into(
             result = result.unionByName(inserts.select(*tcols))
         return result
 
-    for _ in range(max_retries):
-        snap = table.snapshot()
+    def step(snap: dict) -> _Rewrite:
         if not snap["files"]:
             raise ValueError(
                 "merge_into needs an existing target; create the table "
                 "first (overwrite / append / merge_upsert)"
             )
-        if txn is not None and int(
-            snap.get("txns", {}).get(txn[0], -1)
-        ) >= int(txn[1]):
-            return snap["version"]
-        nb = snap.get("n_buckets") or n_buckets
-        if snap.get("n_buckets"):
-            if list(snap["bucket_keys"]) != keys:
-                raise ValueError(
-                    f"table is bucketed by {snap['bucket_keys']}, merge keyed "
-                    f"by {keys} cannot route buckets"
-                )
-            fb = snap["file_buckets"]
-            touched = {
-                r["b"]
-                for r in source.select(
-                    _bucket_of(tuple(keys), nb).alias("b")
-                ).distinct().collect()
-            }
-            keep_files = [f for f in snap["files"] if fb[f] not in touched]
-            rewrite_files = [f for f in snap["files"] if fb[f] in touched]
-            region = (
-                table._scan(
-                    spark, rewrite_files, snap["version"], merge_schema=schema_evolution
-                )
-                if rewrite_files
-                else table.read(
-                    spark, snap["version"], merge_schema=schema_evolution
-                ).limit(0)
-            )
-            rewritten = rewrite(region)
-            merged = table._validate(rewritten.select(*rewritten.columns))
-            new_map = table.stage_bucketed(merged, tuple(keys), nb)
-            files = keep_files + sorted(new_map)
-            meta = {
-                "n_buckets": nb,
-                "bucket_keys": keys,
-                "file_buckets": {**{f: fb[f] for f in keep_files}, **new_map},
-            }
-        else:
-            merged = table._validate(
-                rewrite(
-                    table.read(
-                        spark, snap["version"], merge_schema=schema_evolution
-                    )
-                )
-            )
-            if nb:
-                new_map = table.stage_bucketed(merged, tuple(keys), nb)
-                files, meta = sorted(new_map), {
-                    "n_buckets": nb,
-                    "bucket_keys": keys,
-                    "file_buckets": new_map,
-                }
-            else:
-                files, meta = table.stage(merged), None
-        try:
-            return table.commit(
-                files,
-                snap["version"],
-                bucket_meta=meta,
-                stat_cols=tuple(snap.get("stat_cols", ())),
-                txn=txn,
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"gave up after {max_retries} retries")
+        drop = _keyed_region(snap, keys, source)
+        # no touched bucket: the region is empty but keeps the schema
+        region = table._scan(
+            spark, drop or snap["files"], snap["version"], merge_schema=schema_evolution
+        )
+        rewritten = rewrite(region if drop else region.limit(0))
+        return _Rewrite(drop, table._validate(rewritten.select(*rewritten.columns)))
+
+    return table._write(
+        step, max_retries, txn=txn, key_cols=tuple(keys), n_buckets=n_buckets
+    )[1]
 
 
 def _touched_files(
@@ -2317,6 +2201,42 @@ def _touched_files(
     return [f for f in snap["files"] if f in touched]
 
 
+def _rewrite_where(
+    table: ManifestTable,
+    spark: SparkSession,
+    verb: str,
+    condition: str,
+    rewrite,
+    max_retries: int,
+    txn: tuple[str, int] | None,
+    set_cols=(),
+) -> dict:
+    """DELETE and UPDATE's one write: each attempt replaces the files
+    holding a row that matches ``condition`` (:func:`_touched_files`)
+    with ``rewrite(their rows)``; ``set_cols`` may not name a bucket
+    key. Returns the {version, n_files_touched, n_files_carried, noop}
+    ledger."""
+
+    def step(snap: dict) -> _Rewrite | None:
+        if not snap["files"]:
+            raise ValueError(f"{verb} needs an existing table")
+        bad = set(set_cols) & set(snap.get("bucket_keys") or ())
+        if bad:
+            raise ValueError(
+                f"cannot update bucket key columns {sorted(bad)}; "
+                f"route a key change as delete+insert (merge_apply)"
+            )
+        touched = _touched_files(table, spark, snap, condition)
+        if not touched:
+            return None
+        return _Rewrite(touched, rewrite(table._scan(spark, touched, snap["version"])))
+
+    snap, version, plan, _ = table._write(step, max_retries, txn=txn)
+    n = len(plan.drop) if plan else 0
+    return {"version": version, "n_files_touched": n,
+            "n_files_carried": len(snap["files"]) - n, "noop": plan is None}
+
+
 def delete_where(
     table: ManifestTable,
     spark: SparkSession,
@@ -2332,46 +2252,12 @@ def delete_where(
     {version, n_files_touched, n_files_carried}."""
     from pyspark.sql import functions as F
 
-    for _ in range(max_retries):
-        snap = table.snapshot()
-        if not snap["files"]:
-            raise ValueError("delete_where needs an existing table")
-        if txn is not None and int(
-            snap.get("txns", {}).get(txn[0], -1)
-        ) >= int(txn[1]):
-            return {"version": snap["version"], "n_files_touched": 0,
-                    "n_files_carried": len(snap["files"]), "noop": True}
-        touched = _touched_files(table, spark, snap, condition)
-        if not touched:
-            return {"version": snap["version"], "n_files_touched": 0,
-                    "n_files_carried": len(snap["files"]), "noop": True}
-        keep = [f for f in snap["files"] if f not in set(touched)]
-        remainder = table._scan(spark, touched, snap["version"]).filter(
-            ~F.coalesce(F.expr(condition), F.lit(False))
-        )
-        if snap.get("n_buckets"):
-            new_map = table.stage_bucketed(
-                remainder, tuple(snap["bucket_keys"]), snap["n_buckets"]
-            )
-            fb = snap["file_buckets"]
-            files = keep + sorted(new_map)
-            meta = {
-                "n_buckets": snap["n_buckets"],
-                "bucket_keys": snap["bucket_keys"],
-                "file_buckets": {**{f: fb[f] for f in keep}, **new_map},
-            }
-        else:
-            files, meta = keep + table.stage(remainder), None
-        try:
-            version = table.commit(
-                files, snap["version"], bucket_meta=meta,
-                stat_cols=tuple(snap.get("stat_cols", ())), txn=txn,
-            )
-        except CommitConflict:
-            continue
-        return {"version": version, "n_files_touched": len(touched),
-                "n_files_carried": len(keep), "noop": False}
-    raise CommitConflict(f"gave up after {max_retries} retries")
+    def remainder(region: DataFrame) -> DataFrame:
+        return region.filter(~F.coalesce(F.expr(condition), F.lit(False)))
+
+    return _rewrite_where(
+        table, spark, "delete_where", condition, remainder, max_retries, txn
+    )
 
 
 def update_where(
@@ -2392,56 +2278,18 @@ def update_where(
     constraints validate the rewritten rows."""
     from pyspark.sql import functions as F
 
-    for _ in range(max_retries):
-        snap = table.snapshot()
-        if not snap["files"]:
-            raise ValueError("update_where needs an existing table")
-        if snap.get("n_buckets"):
-            bad = set(set_exprs) & set(snap["bucket_keys"])
-            if bad:
-                raise ValueError(
-                    f"cannot update bucket key columns {sorted(bad)}; "
-                    f"route a key change as delete+insert (merge_apply)"
-                )
-        if txn is not None and int(
-            snap.get("txns", {}).get(txn[0], -1)
-        ) >= int(txn[1]):
-            return {"version": snap["version"], "n_files_touched": 0,
-                    "n_files_carried": len(snap["files"]), "noop": True}
-        touched = _touched_files(table, spark, snap, condition)
-        if not touched:
-            return {"version": snap["version"], "n_files_touched": 0,
-                    "n_files_carried": len(snap["files"]), "noop": True}
-        keep = [f for f in snap["files"] if f not in set(touched)]
-        region = table._scan(spark, touched, snap["version"])
-        hit = F.coalesce(F.expr(condition), F.lit(False))
+    hit = F.coalesce(F.expr(condition), F.lit(False))
+
+    def updated(region: DataFrame) -> DataFrame:
         cols = [
             F.when(hit, F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)
             if c in set_exprs
             else F.col(c)
             for c in region.columns
         ]
-        rewritten = table._validate(region.select(*cols))
-        if snap.get("n_buckets"):
-            new_map = table.stage_bucketed(
-                rewritten, tuple(snap["bucket_keys"]), snap["n_buckets"]
-            )
-            fb = snap["file_buckets"]
-            files = keep + sorted(new_map)
-            meta = {
-                "n_buckets": snap["n_buckets"],
-                "bucket_keys": snap["bucket_keys"],
-                "file_buckets": {**{f: fb[f] for f in keep}, **new_map},
-            }
-        else:
-            files, meta = keep + table.stage(rewritten), None
-        try:
-            version = table.commit(
-                files, snap["version"], bucket_meta=meta,
-                stat_cols=tuple(snap.get("stat_cols", ())), txn=txn,
-            )
-        except CommitConflict:
-            continue
-        return {"version": version, "n_files_touched": len(touched),
-                "n_files_carried": len(keep), "noop": False}
-    raise CommitConflict(f"gave up after {max_retries} retries")
+        return table._validate(region.select(*cols))
+
+    return _rewrite_where(
+        table, spark, "update_where", condition, updated, max_retries, txn,
+        set_cols=tuple(set_exprs),
+    )

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dicebox_sensorybatchprocessor_spark.lake import CommitConflict, ManifestTable
+from dicebox_sensorybatchprocessor_spark.lake import ManifestTable, _Rewrite
 
 _ALLOWED = ("count", "sum", "avg", "min", "max")
 
@@ -282,7 +282,9 @@ class MaterializedAgg:
         recompute_ratio: float = 0.6,
         small_table_bytes: int = 64 << 20,
     ) -> dict:
-        """Advance the view to the base table's latest version. Returns a
+        """Advance the view to the base table's latest version, resolved
+        afresh on every commit attempt, so a retry never moves the view
+        behind a version another refresher published. Returns a
         ledger: versions walked, files scanned (the commit's delta, not
         the table), groups changed, and ``mode`` — which strategy ran.
 
@@ -302,47 +304,38 @@ class MaterializedAgg:
         ``mode='incremental'`` / ``mode='recompute'`` force a path."""
         if mode not in ("auto", "incremental", "recompute"):
             raise ValueError(f"unknown refresh mode {mode!r}")
-        v_to = self.base.latest_version()
-        for _ in range(max_retries):
-            mv_snap = self.table.snapshot()
+        ledger: dict = {}
+
+        def step(mv_snap: dict) -> _Rewrite | None:
+            # the target resolves per attempt: a retry that kept a stale
+            # one would walk the view back below the base version a
+            # concurrent refresher has already published
+            v_to = self.base.latest_version()
             v_from = int(mv_snap.get("mv_base_version", 0))
-            if v_from == v_to:
-                return {
-                    "from_version": v_from,
-                    "to_version": v_to,
-                    "plus_files": 0,
-                    "minus_files": 0,
-                    "noop": True,
-                    "mode": "noop",
-                }
+            ledger.update(
+                from_version=v_from,
+                to_version=v_to,
+                plus_files=0,
+                minus_files=0,
+                noop=True,
+                mode="noop",
+            )
+            if v_from >= v_to:
+                return None
             old_snap = self.base.snapshot(v_from) if v_from else None
             new_snap = self.base.snapshot(v_to)
             old_files = set(old_snap["files"]) if old_snap else set()
             new_files = set(new_snap["files"])
             plus = sorted(new_files - old_files)
             minus = sorted(old_files - new_files)
+            meta = {"mv_base_version": v_to}
             if not plus and not minus:
                 # file-identical versions (e.g. a txn-only commit): the
                 # state is already correct — just advance the watermark,
                 # reusing the state files verbatim
-                try:
-                    self.table.commit(
-                        mv_snap["files"],
-                        mv_snap["version"],
-                        bucket_meta={"mv_base_version": v_to},
-                    )
-                except CommitConflict:
-                    continue
-                return {
-                    "from_version": v_from,
-                    "to_version": v_to,
-                    "plus_files": 0,
-                    "minus_files": 0,
-                    "noop": True,
-                    "mode": "noop",
-                }
+                return _Rewrite([], meta=meta)
             old_state = (
-                self.table.read(spark) if mv_snap["files"] else None
+                self.table.read(spark, mv_snap["version"]) if mv_snap["files"] else None
             )
             legacy_state = old_state is not None and any(
                 f"__c_{c}" not in old_state.columns for c in self._sum_cols
@@ -384,24 +377,16 @@ class MaterializedAgg:
                 merged = self._attach_minmax(
                     spark, merged, delta.select(*self.groups), old_state, v_to
                 )
-            files = self.table.stage(merged)
-            try:
-                self.table.commit(
-                    files,
-                    mv_snap["version"],
-                    bucket_meta={"mv_base_version": v_to},
-                )
-            except CommitConflict:
-                continue
-            return {
-                "from_version": v_from,
-                "to_version": v_to,
-                "plus_files": len(plus),
-                "minus_files": len(minus),
-                "noop": False,
-                "mode": "recompute" if recompute else "incremental",
-            }
-        raise CommitConflict(f"gave up after {max_retries} retries")
+            ledger.update(
+                plus_files=len(plus),
+                minus_files=len(minus),
+                noop=False,
+                mode="recompute" if recompute else "incremental",
+            )
+            return _Rewrite(mv_snap["files"], merged, meta=meta)
+
+        self.table._write(step, max_retries)
+        return ledger
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The view as the user declared it: groups + named measures."""

@@ -520,3 +520,30 @@ def test_legacy_state_without_counters_migrates_via_recompute(spark, tmp_path):
     assert _got(spark, mv) == _expected(spark, t)
     # noop ledgers carry the mode key too (bench reads it unconditionally)
     assert mv.refresh(spark)["mode"] == "noop"
+
+
+def test_refresh_retry_never_moves_the_view_backward(spark, tmp_path):
+    """Refresher A plans v1 -> v2; before A publishes, a base commit
+    makes v3 and refresher B brings the view to v3, so A's commit
+    conflicts. A's retry must target the base's CURRENT version: a
+    target kept from the first attempt would run 3 -> 2 and publish a
+    view older than the one it replaced."""
+    t, mv = _mk(spark, tmp_path)
+    mv.refresh(spark)
+    merge_upsert(t, _base_df(spark, [(1, "a", 100.0)]), ("k",))
+    real_commit, injected = mv.table.commit, []
+
+    def racing_commit(files, base_version, **kwargs):
+        if not injected:
+            injected.append(True)
+            merge_upsert(t, _base_df(spark, [(40, "b", 7.0)]), ("k",))
+            assert mv.refresh(spark)["to_version"] == t.latest_version()
+        return real_commit(files, base_version, **kwargs)
+
+    mv.table.commit = racing_commit
+    ledger = mv.refresh(spark, mode="incremental")
+    mv.table.commit = real_commit
+    assert injected
+    assert mv.refreshed_version() == t.latest_version() == 3
+    assert ledger["noop"] and ledger["to_version"] == 3
+    assert _got(spark, mv) == _expected(spark, t)
