@@ -95,6 +95,12 @@ _DRIVER_WINDOW = (
     "sql_q19_disjunctive_ranges",
     "sql_q20_promo_concentration",
     "sql_q5_local_supplier_volume",
+    "sink_foreach_batch",
+    "stream_watermark",
+    "stream_quarantine",
+    "stream_dedup_wm",
+    "stream_join_outer",
+    "stream_update_mode",
     # oldest driver-green fill
     "agg_approx_distinct",  # last green r10
     "join_skew_salted",  # last green r10
@@ -105,12 +111,6 @@ _DRIVER_WINDOW = (
     "fn_map",  # last green r10
     "fn_json",  # last green r10
     "fn_bitwise",  # last green r10
-    "udf_scalar",  # last green r10
-    "udtf_grouped_map",  # last green r10
-    "udtf_map",  # last green r10
-    "text_token_stats",  # last green r10
-    "text_quality",  # last green r10
-    "text_lang_stats",  # last green r10
 )
 
 

@@ -1541,44 +1541,98 @@ def dedup_stream(
     return stream.dropDuplicates(keys)
 
 
+def _as_table(table):
+    """``table`` as a lake.ManifestTable: a table passes through, a root
+    path opens one."""
+    from dicebox_sensorybatchprocessor_spark import lake
+
+    return lake.ManifestTable(table) if isinstance(table, str) else table
+
+
+def _micro_batch_sink(
+    stream: DataFrame,
+    builder: str,
+    commit,
+    checkpoint_dir: str | None,
+    available_now: bool,
+    ck_prefix: str,
+    txn_app_id: str | None = None,
+    refresh_views=(),
+    output_mode: str = "append",
+):
+    """The one exactly-once micro-batch sink under the streaming lake
+    builders. Each micro-batch runs ``commit(batch_df, txn)`` with
+    ``txn = (app_id, batch_id)``, the manifest transaction every lake
+    write skips once the table holds it, so a checkpoint replay of a
+    committed batch writes nothing twice. ``refresh_views``
+    (mv.MaterializedAgg instances over the committed tables) refresh
+    after every commit. ``app_id`` is ``txn_app_id`` or
+    ``"<builder>:<checkpoint dir name>"``, the identity the replay itself
+    is keyed by; the checkpoint defaults to a fresh scratch dir named
+    ``ck_prefix*``. Runs in ``output_mode`` (availableNow when
+    ``available_now``) and returns the started StreamingQuery."""
+    import os as _os
+
+    from dicebox_sensorybatchprocessor_spark.utils import scratch_dir
+
+    ck = checkpoint_dir or scratch_dir(prefix=ck_prefix)
+    app_id = txn_app_id or f"{builder}:{_os.path.basename(_os.path.normpath(ck))}"
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        commit(batch_df, (app_id, int(batch_id)))
+        for view in refresh_views:
+            view.refresh(batch_df.sparkSession)
+
+    writer = (
+        stream.writeStream.foreachBatch(run)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ck)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def quarantine_stream(
     stream: DataFrame,
     invalid: Column,
-    dataset_dir: str,
-    quarantine_dir: str,
+    dataset_dir,
+    quarantine_dir,
     repair=None,
     checkpoint_dir: str | None = None,
     available_now: bool = True,
 ):
     """Dead-letter routing sink over any streaming DataFrame: each
     micro-batch appends rows failing ``invalid`` to the quarantine
-    (dead-letter) parquet sink — optionally normalized by ``repair``
-    (batch DataFrame -> batch DataFrame) — and the rest to the dataset
-    sink; both writes inside ONE foreachBatch over a persisted batch, so
-    the batch is scanned once. This is the idiomatic Spark form of a
-    broker nack/dead-letter loop: poison messages leave the hot path but
-    stay queryable for triage/replay. Returns the started
-    StreamingQuery — the caller awaits (or lets it run resident)."""
-    from dicebox_sensorybatchprocessor_spark.utils import scratch_dir
+    (dead-letter) table — optionally normalized by ``repair`` (batch
+    DataFrame -> batch DataFrame) — and the rest to the dataset table.
+    Each output is a lake.ManifestTable or a root path, as
+    :func:`append_stream`'s is; read it with
+    ``ManifestTable(root).read(spark)``. Both appends run over one
+    persisted batch, so the batch is scanned once, and both record the
+    batch's ``(app_id, batch_id)`` transaction (``app_id`` is
+    ``quarantine_stream:<checkpoint dir name>``), so a replayed batch
+    skips whichever commit already landed instead of duplicating its
+    rows. This is the idiomatic Spark form of a broker nack/dead-letter
+    loop: poison messages leave the hot path but stay queryable for
+    triage/replay. The writer and checkpoint are
+    :func:`_micro_batch_sink`'s. Returns the started StreamingQuery —
+    the caller awaits (or lets it run resident)."""
+    ok_t, bad_t = _as_table(dataset_dir), _as_table(quarantine_dir)
 
-    def route(batch_df: DataFrame, batch_id: int) -> None:
+    def route(batch_df: DataFrame, txn) -> None:
         batch_df.persist()
         try:
-            batch_df.filter(~invalid).write.mode("append").parquet(dataset_dir)
+            ok_t.append(batch_df.filter(~invalid), txn=txn)
             bad = batch_df.filter(invalid)
-            if repair is not None:
-                bad = repair(bad)
-            bad.write.mode("append").parquet(quarantine_dir)
+            bad_t.append(repair(bad) if repair is not None else bad, txn=txn)
         finally:
             batch_df.unpersist()
 
-    ck = checkpoint_dir or scratch_dir(prefix="sbp_ck_api_quar_")
-    writer = stream.writeStream.foreachBatch(route).option(
-        "checkpointLocation", ck
+    return _micro_batch_sink(
+        stream, "quarantine_stream", route, checkpoint_dir, available_now,
+        "sbp_ck_api_quar_",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def upsert_stream(
@@ -1591,6 +1645,7 @@ def upsert_stream(
     n_buckets: int | None = None,
     txn_app_id: str | None = None,
     refresh_views=(),
+    output_mode: str = "update",
 ):
     """Streaming MERGE (upsert) sink through the manifest-commit
     protocol: each micro-batch — optionally reshaped by ``transform``
@@ -1603,44 +1658,45 @@ def upsert_stream(
     ManifestTable or a root path. ``n_buckets`` hash-buckets the store
     by key so each micro-batch rewrites only the buckets its keys touch
     (partial-rewrite MERGE — the sink cost a resident stream needs:
-    proportional to the delta, not the accumulated state). Returns the
-    started StreamingQuery; read the result via
-    ``ManifestTable(root).read(spark)``.
+    proportional to the delta, not the accumulated state). The query
+    runs in ``output_mode``, ``update`` by default: on a stateless
+    stream it emits the same rows as append, and on a streaming
+    aggregation it emits each batch's changed groups, which the merge
+    folds in by key — the table then holds the latest row per key.
+    Spark rejects ``update`` at ``start()`` for a stream-stream join and
+    for an append-mode ``applyInPandasWithState``; pass
+    ``output_mode="append"`` for those. Returns the started
+    StreamingQuery; read the result via ``ManifestTable(root).read(spark)``.
 
     Exactly-once (r9): every micro-batch commit records a
     ``(txn_app_id, batch_id)`` transaction in the manifest, so when the
     checkpoint replays a batch whose commit DID land before a crash,
     the merge is skipped outright (lake.merge_upsert txn contract) —
     protocol-level idempotence on top of the merge's content
-    idempotence. ``txn_app_id`` defaults to the checkpoint directory
-    name, the same identity the replay itself is keyed by; pass an
-    explicit stable id when the checkpoint path changes across
-    deployments. ``refresh_views`` (mv.MaterializedAgg instances over
-    this table) refresh after every commit, each reading only the
-    commit's file delta."""
-    import os as _os
-
+    idempotence. ``txn_app_id`` defaults to
+    ``upsert_stream:<checkpoint dir name>``, the same identity the
+    replay itself is keyed by; pass an explicit stable id when the
+    checkpoint path changes across deployments. ``refresh_views``
+    (mv.MaterializedAgg instances over this table) refresh after every
+    commit, each reading only the commit's file delta. The writer,
+    checkpoint and txn are :func:`_micro_batch_sink`'s."""
     from dicebox_sensorybatchprocessor_spark import lake
-    from dicebox_sensorybatchprocessor_spark.utils import scratch_dir
 
-    t = lake.ManifestTable(table) if isinstance(table, str) else table
-    keys = tuple(key_cols)
-    ck = checkpoint_dir or scratch_dir(prefix="sbp_ck_api_upsert_")
-    app_id = txn_app_id or f"upsert_stream:{_os.path.basename(_os.path.normpath(ck))}"
+    t, keys = _as_table(table), tuple(key_cols)
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(batch_df: DataFrame, txn) -> None:
         b = transform(batch_df) if transform is not None else batch_df
-        lake.merge_upsert(
-            t, b, keys, n_buckets=n_buckets, txn=(app_id, int(batch_id))
-        )
-        for view in refresh_views:
-            view.refresh(batch_df.sparkSession)
-    writer = stream.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", ck
+        # the merge reads the batch twice (its keys and its rows)
+        b.persist()
+        try:
+            lake.merge_upsert(t, b, keys, n_buckets=n_buckets, txn=txn)
+        finally:
+            b.unpersist()
+
+    return _micro_batch_sink(
+        stream, "upsert_stream", merge, checkpoint_dir, available_now,
+        "sbp_ck_api_upsert_", txn_app_id, refresh_views, output_mode,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def append_stream(
@@ -1662,32 +1718,25 @@ def append_stream(
     replays a batch whose commit landed before a crash, the append is
     skipped outright — which matters MORE here than for the merge sink,
     since a replayed blind append duplicates rows instead of converging.
+    ``txn_app_id`` defaults to ``append_stream:<checkpoint dir name>``.
+    The query runs in append output mode, so a watermarked aggregation
+    or an outer stream-stream join lands each finalized row once.
     ``refresh_views`` (mv.MaterializedAgg instances over this table)
     refresh after every commit, each reading only the batch's files —
     the streaming rollup pattern: fact stream in, always-current
     aggregate out, per-trigger cost proportional to the trigger.
+    The writer, checkpoint and txn are :func:`_micro_batch_sink`'s.
     Returns the started StreamingQuery."""
-    import os as _os
+    t = _as_table(table)
 
-    from dicebox_sensorybatchprocessor_spark import lake
-    from dicebox_sensorybatchprocessor_spark.utils import scratch_dir
-
-    t = lake.ManifestTable(table) if isinstance(table, str) else table
-    ck = checkpoint_dir or scratch_dir(prefix="sbp_ck_api_append_")
-    app_id = txn_app_id or f"append_stream:{_os.path.basename(_os.path.normpath(ck))}"
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def sink(batch_df: DataFrame, txn) -> None:
         b = transform(batch_df) if transform is not None else batch_df
-        t.append(b, n_files=n_files, txn=(app_id, int(batch_id)))
-        for view in refresh_views:
-            view.refresh(batch_df.sparkSession)
+        t.append(b, n_files=n_files, txn=txn)
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", ck
+    return _micro_batch_sink(
+        stream, "append_stream", sink, checkpoint_dir, available_now,
+        "sbp_ck_api_append_", txn_app_id, refresh_views,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merge_into(
@@ -1706,7 +1755,7 @@ def merge_into(
     exactly-once replays)."""
     from dicebox_sensorybatchprocessor_spark import lake
 
-    t = lake.ManifestTable(table) if isinstance(table, str) else table
+    t = _as_table(table)
     return lake.merge_into(t, source, tuple(key_cols), **legs)
 
 
@@ -1717,7 +1766,7 @@ def update_where(table, spark, set_exprs: dict[str, str], condition: str, **kw):
     bucket-key protection, and constraint validation)."""
     from dicebox_sensorybatchprocessor_spark import lake
 
-    t = lake.ManifestTable(table) if isinstance(table, str) else table
+    t = _as_table(table)
     return lake.update_where(t, spark, set_exprs, condition, **kw)
 
 
@@ -1726,7 +1775,7 @@ def delete_where(table, spark, condition: str, **kw):
     touched-file pruning (thin wrapper over :func:`lake.delete_where`)."""
     from dicebox_sensorybatchprocessor_spark import lake
 
-    t = lake.ManifestTable(table) if isinstance(table, str) else table
+    t = _as_table(table)
     return lake.delete_where(t, spark, condition, **kw)
 
 
@@ -1749,7 +1798,7 @@ def apply_changes(
     ManifestTable or root path; returns the committed version."""
     from dicebox_sensorybatchprocessor_spark import lake
 
-    t = lake.ManifestTable(table) if isinstance(table, str) else table
+    t = _as_table(table)
     return lake.merge_apply(
         t,
         changes,
@@ -3491,40 +3540,28 @@ def cdc_stream(
     :func:`lake.merge_apply` — a key whose history within the batch
     ends in delete is absent, deletes route to buckets exactly like
     upserts, and the ``(txn_app_id, batch_id)`` manifest transaction
+    (``txn_app_id`` defaults to ``cdc_stream:<checkpoint dir name>``)
     skips replayed batches outright. This is the Debezium-topic →
     lake-table path: per-trigger cost proportional to the batch's key
     spread, never the table. ``refresh_views`` maintains
     mv.MaterializedAgg rollups per commit, so deletes flow through to
-    the aggregates incrementally too."""
-    import os as _os
-
+    the aggregates incrementally too. The writer, checkpoint and txn
+    are :func:`_micro_batch_sink`'s; returns the started
+    StreamingQuery."""
     from dicebox_sensorybatchprocessor_spark import lake
-    from dicebox_sensorybatchprocessor_spark.utils import scratch_dir
 
-    t = lake.ManifestTable(table) if isinstance(table, str) else table
-    keys = tuple(key_cols)
-    ck = checkpoint_dir or scratch_dir(prefix="sbp_ck_api_cdc_")
-    app_id = txn_app_id or f"cdc_stream:{_os.path.basename(_os.path.normpath(ck))}"
+    t, keys = _as_table(table), tuple(key_cols)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def sink(batch_df: DataFrame, txn) -> None:
         lake.merge_apply(
-            t,
-            batch_df,
-            keys,
-            op_col=op_col,
-            seq_col=seq_col,
-            n_buckets=n_buckets,
-            txn=(app_id, int(batch_id)),
+            t, batch_df, keys, op_col=op_col, seq_col=seq_col,
+            n_buckets=n_buckets, txn=txn,
         )
-        for view in refresh_views:
-            view.refresh(batch_df.sparkSession)
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", ck
+    return _micro_batch_sink(
+        stream, "cdc_stream", sink, checkpoint_dir, available_now,
+        "sbp_ck_api_cdc_", txn_app_id, refresh_views,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def pq_save(codes_df, codebooks: list, path: str) -> None:
@@ -4110,7 +4147,9 @@ def substring_dedup_stream(
 
     Crash/replay correctness without version travel, by WRITE ORDER:
     the results append commits FIRST (txn ``<app>:res``), the state
-    merge SECOND (txn ``<app>:state``), both exactly-once. A replayed
+    merge SECOND (txn ``<app>:state``), both exactly-once; ``<app>`` is
+    ``txn_app_id`` or ``substring_dedup_stream:<checkpoint dir name>``,
+    and the writer and checkpoint are :func:`_micro_batch_sink`'s. A replayed
     batch whose results landed but whose state merge didn't recomputes
     ``flagged`` from the still-pre-batch state (discarded by the
     results txn skip) and re-runs only the state merge; a fully-landed
@@ -4123,30 +4162,14 @@ def substring_dedup_stream(
     — bucket it by ``__sbp_h`` (pass a bucketed ManifestTable) so each
     micro-batch's merge rewrites only touched buckets, and compact on
     the maintenance cadence. Returns the started StreamingQuery."""
-    import os as _os
-
     from dicebox_sensorybatchprocessor_spark import lake
-    from dicebox_sensorybatchprocessor_spark.utils import scratch_dir
 
-    t_res = (
-        lake.ManifestTable(results_table)
-        if isinstance(results_table, str)
-        else results_table
-    )
-    t_state = (
-        lake.ManifestTable(state_table)
-        if isinstance(state_table, str)
-        else state_table
-    )
-    ck = checkpoint_dir or scratch_dir(prefix="sbp_ck_substr_")
-    app = txn_app_id or (
-        f"substring_dedup_stream:{_os.path.basename(_os.path.normpath(ck))}"
-    )
+    t_res, t_state = _as_table(results_table), _as_table(state_table)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def process(batch_df: DataFrame, txn) -> None:
+        app, batch_id = txn
         state_df = (
-            t_state.read(spark) if t_state.data_files() else None
+            t_state.read(batch_df.sparkSession) if t_state.data_files() else None
         )
         flagged, state_upd = duplicate_spans_incremental(
             batch_df,
@@ -4162,20 +4185,15 @@ def substring_dedup_stream(
             # (ADVICE r13 #1)
             state_delta=True,
         )
-        t_res.append(flagged, txn=(f"{app}:res", int(batch_id)))
+        t_res.append(flagged, txn=(f"{app}:res", batch_id))
         lake.merge_upsert(
-            t_state,
-            state_upd,
-            ("__sbp_h",),
-            txn=(f"{app}:state", int(batch_id)),
+            t_state, state_upd, ("__sbp_h",), txn=(f"{app}:state", batch_id)
         )
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", ck
+    return _micro_batch_sink(
+        stream, "substring_dedup_stream", process, checkpoint_dir,
+        available_now, "sbp_ck_substr_", txn_app_id,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def token_budget_allocation(

@@ -1,12 +1,14 @@
 """Fixture table loaders (SURVEY.md §2.1 scan_parquet / scan_parquet_ns).
 
-One shared loader for all operators so the ``events`` nanosecond-timestamp
-repair (FIXTURES.md "events") is applied exactly once, in one place:
+One shared loader for all operators so the ``events`` timestamp repair
+(FIXTURES.md "events") is applied exactly once, in one place:
 
-* parquet stores ``events.ts`` as timestamp[ns]; with
-  ``spark.sql.legacy.parquet.nanosAsLong=true`` Spark reads it as a LONG of
-  nanoseconds since epoch.
-* ``timestamp_micros(ts div 1000)`` rebuilds a microsecond TIMESTAMP_NTZ.
+* the fixture parquet stores ``events.ts`` as timestamp[us], which Spark
+  reads as TIMESTAMP_NTZ with nothing to repair;
+* a timestamp[ns] ``events.ts`` read with
+  ``spark.sql.legacy.parquet.nanosAsLong=true`` arrives as a LONG of
+  nanoseconds since epoch, and ``timestamp_micros(ts div 1000)`` rebuilds
+  a microsecond TIMESTAMP_NTZ.
   Integer ``div`` (JVM-side long division) is exact; a double-precision
   ``/`` would lose up to ~128 ns on epoch-scale nanos. DuckDB also floors
   ns → µs, so both sides agree to the microsecond.

@@ -2,8 +2,9 @@
 
 The profile pins the behaviors every operator depends on:
 
-- ``spark.sql.legacy.parquet.nanosAsLong=true`` — ``events.ts`` is
-  nanosecond-precision parquet (FIXTURES.md). Early PySpark 4.x builds
+- ``spark.sql.legacy.parquet.nanosAsLong=true`` — the fixture
+  ``events.ts`` is microsecond parquet, but a nanosecond-precision one
+  must load too (FIXTURES.md). Early PySpark 4.x builds
   refuse the read otherwise (PARQUET_TYPE_ILLEGAL) and deliver ns-LONG
   with it; current builds read TIMESTAMP(NANOS) natively as µs-truncated
   TIMESTAMP_NTZ and ignore this knob, so :mod:`.io` (batch) and

@@ -275,29 +275,39 @@ def source_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R6 micro-batch accumulation + R5 persist: three staged files →
-    maxFilesPerTrigger=1 → one foreachBatch parquet append per micro-batch;
-    read back and count per batch. Files are split by event_id%3 with
-    ordered mtimes, so batch_id ↔ residue class deterministically."""
+    maxFilesPerTrigger=1 → one exactly-once lake append per micro-batch
+    (api.append_stream); each table version's added rows, counted from
+    the parquet footers, are its batch's count, and the version's txn
+    record names the batch. Files are split by event_id%3 with ordered
+    mtimes, so batch_id ↔ residue class deterministically."""
+    import pyarrow.parquet as pq
+
+    from dicebox_sensorybatchprocessor_spark import api, lake
+
     spark = _streaming_session(spark)
     raw = _events_raw(spark, sf_dir)
     parts = [raw.filter(F.col("event_id") % 3 == i) for i in range(3)]
     staged = _stage_files(spark, parts, "feb", cache_key=sf_dir)
-    out_dir = scratch_dir(prefix="sbp_feb_out_")
-
-    def persist(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(out_dir)
-
+    table = lake.ManifestTable(scratch_dir(prefix="sbp_feb_out_"))
     stream = _events_stream(spark, staged, max_files=1)
-    ck = scratch_dir(prefix="sbp_ck_feb_")
-    q = (
-        stream.writeStream.foreachBatch(persist)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    api.append_stream(
+        stream,
+        table,
+        checkpoint_dir=scratch_dir(prefix="sbp_ck_feb_"),
+        txn_app_id="sink_foreach_batch",
+    ).awaitTermination()
+
+    def added_rows(v: int) -> int:
+        new = set(table.snapshot(v)["files"]) - set(table.snapshot(v - 1)["files"])
+        return sum(pq.read_metadata(os.path.join(table.root, f)).num_rows for f in new)
+
+    return spark.createDataFrame(
+        [
+            (table.txn_version("sink_foreach_batch", v), added_rows(v))
+            for v in range(1, table.latest_version() + 1)
+        ],
+        "batch_id INT, n_rows BIGINT",
     )
-    q.awaitTermination()
-    back = spark.read.parquet(out_dir)
-    return back.groupBy("batch_id").agg(F.count("*").alias("n_rows"))
 
 
 @register(
@@ -429,7 +439,11 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Within a single availableNow run the watermark only advances at run
     end (measured: numRowsDroppedByWatermark=0 for a same-run late batch),
     so the cross-run checkpoint restore is the semantics-bearing path —
-    and the one a 100 TB at-least-once ingest actually exercises."""
+    and the one a 100 TB at-least-once ingest actually exercises. Both
+    runs land in one lake table through api.append_stream; the shared
+    checkpoint keeps one txn app id, so a replayed batch appends once."""
+    from dicebox_sensorybatchprocessor_spark import api, lake
+
     spark = _streaming_session(spark)
     raw = _events_raw(spark, sf_dir)
     cutoff_ns = raw.agg(F.expr("min(ts) + 86400000000000")).first()[0]  # min + 1 day, in ns
@@ -443,29 +457,16 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     late_dir = _stage_files(spark, [late_redelivery], "wm_late", cache_key=sf_dir)
 
     ck = scratch_dir(prefix="sbp_ck_wm_")
-    out_dir = scratch_dir(prefix="sbp_wm_out_")
+    table = lake.ManifestTable(scratch_dir(prefix="sbp_wm_out_"))
 
     def run_once() -> None:
-        from dicebox_sensorybatchprocessor_spark import api
-
         stream = _events_stream(spark, staged)
         # api.windowed_stream with a watermark (round 6): the bounded-state
         # append-mode form a user's own late-data stream runs.
         agg = api.windowed_stream(
             stream, ts_col="ts", window="1 hour", watermark="1 hour"
         )
-
-        def persist(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            agg.writeStream.foreachBatch(persist)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        api.append_stream(agg, table, checkpoint_dir=ck).awaitTermination()
 
     run_once()  # drain on-time data; checkpoint commits the advanced watermark
     _link_or_copy(
@@ -473,8 +474,9 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(staged, "part-100.parquet"),
     )
     run_once()  # restart: late redelivery arrives below the restored watermark
-    back = spark.read.parquet(out_dir)
-    return back.select(F.col("window.start").alias("hour_start"), "n_events")
+    return table.read(spark).select(
+        F.col("window.start").alias("hour_start"), "n_events"
+    )
 
 
 @register(
@@ -778,12 +780,12 @@ def stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R10 poison-message handling: a replay where some messages are
     malformed (null category ≈ missing label, negative value ≈ failed
     decode). Each micro-batch routes valid rows to the category dataset
-    sink and malformed rows to a dead-letter quarantine sink — both
-    parquet appends inside one foreachBatch, the idiomatic Spark form of
-    the reference's nack/dead-letter loop. Read back and count per
-    (sink, category); the oracle recomputes the same routing in SQL.
-    Thin wrapper over api.quarantine_stream (r8)."""
-    from dicebox_sensorybatchprocessor_spark import api
+    table and malformed rows to a dead-letter quarantine table — two
+    exactly-once lake appends per micro-batch sharing the batch's txn,
+    the idiomatic Spark form of the reference's nack/dead-letter loop.
+    Read back and count per (sink, category); the oracle recomputes the
+    same routing in SQL. Thin wrapper over api.quarantine_stream (r8)."""
+    from dicebox_sensorybatchprocessor_spark import api, lake
 
     spark = _streaming_session(spark)
     raw = _events_raw(spark, sf_dir)
@@ -798,8 +800,8 @@ def stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     parts = [damaged.filter(F.col("event_id") % 2 == i) for i in range(2)]
     staged = _stage_files(spark, parts, "quar", cache_key=sf_dir)
-    dataset_dir = scratch_dir(prefix="sbp_quar_ok_")
-    quarantine_dir = scratch_dir(prefix="sbp_quar_dlq_")
+    ok_t = lake.ManifestTable(scratch_dir(prefix="sbp_quar_ok_"))
+    dlq_t = lake.ManifestTable(scratch_dir(prefix="sbp_quar_dlq_"))
 
     invalid = F.col("event_type").isNull() | (F.col("value") < 0)
 
@@ -809,19 +811,16 @@ def stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stream = _events_stream(spark, staged, max_files=1)
-    q = api.quarantine_stream(
+    api.quarantine_stream(
         stream,
         invalid,
-        dataset_dir,
-        quarantine_dir,
+        ok_t,
+        dlq_t,
         repair=repair,
         checkpoint_dir=scratch_dir(prefix="sbp_ck_quar_"),
-    )
-    q.awaitTermination()
-    ok = spark.read.parquet(dataset_dir).select("event_type").withColumn(
-        "sink", F.lit("dataset")
-    )
-    dlq = spark.read.parquet(quarantine_dir).select("event_type").withColumn(
+    ).awaitTermination()
+    ok = ok_t.read(spark).select("event_type").withColumn("sink", F.lit("dataset"))
+    dlq = dlq_t.read(spark).select("event_type").withColumn(
         "sink", F.lit("quarantine")
     )
     return (
@@ -847,38 +846,25 @@ def stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch; within one availableNow run the watermark holds (see
     stream_watermark), so the redelivery is in-horizon and dropped — the
     per-type counts must equal the clean source. Thin wrapper over
-    api.dedup_stream(within_watermark=...) (r8)."""
+    api.dedup_stream(within_watermark=...) (r8), landed exactly-once
+    through api.append_stream."""
+    from dicebox_sensorybatchprocessor_spark import api, lake
+
     spark = _streaming_session(spark)
     raw = _events_raw(spark, sf_dir)
     dups = raw.filter(F.col("event_id") % 10 == 0)
     staged = _stage_files(spark, [raw, dups], "dedup10", cache_key=sf_dir)
-
-    ck = scratch_dir(prefix="sbp_ck_dedupwm_")
-    out_dir = scratch_dir(prefix="sbp_dedupwm_out_")
-
-    def run_once() -> None:
-        from dicebox_sensorybatchprocessor_spark import api
-
-        stream = _events_stream(spark, staged, max_files=1)
-        deduped = api.dedup_stream(
-            stream, ("event_id",), ts_col="ts", within_watermark="2 hours"
-        )
-
-        def persist(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            deduped.writeStream.foreachBatch(persist)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()
-    back = spark.read.parquet(out_dir)
-    return back.groupBy("event_type").agg(F.count("*").alias("n_events"))
+    stream = _events_stream(spark, staged, max_files=1)
+    deduped = api.dedup_stream(
+        stream, ("event_id",), ts_col="ts", within_watermark="2 hours"
+    )
+    table = lake.ManifestTable(scratch_dir(prefix="sbp_dedupwm_out_"))
+    api.append_stream(
+        deduped, table, checkpoint_dir=scratch_dir(prefix="sbp_ck_dedupwm_")
+    ).awaitTermination()
+    return table.read(spark).groupBy("event_type").agg(
+        F.count("*").alias("n_events")
+    )
 
 
 @register(
@@ -947,7 +933,11 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing, its purchase stays in state, never past its own watermark)
     and re-runs on the shared checkpoint until the sink stops growing —
     outer emission frequently needs one batch beyond the watermark
-    commit, which a single availableNow run does not deliver."""
+    commit, which a single availableNow run does not deliver. Every run
+    appends to one lake table through api.append_stream, exactly-once
+    per batch."""
+    from dicebox_sensorybatchprocessor_spark import api, lake
+
     spark = _streaming_session(spark)
     # base layout == the shared single-file events stage; the advancer is
     # a constant two-row file — both cache, each run links its own
@@ -960,7 +950,7 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     adv_dir = _stage_files(spark, [advancer], "ssoj_adv", cache_key=sf_dir)
     ck = scratch_dir(prefix="sbp_ck_ssoj_")
-    out_dir = scratch_dir(prefix="sbp_ssoj_out_")
+    table = lake.ManifestTable(scratch_dir(prefix="sbp_ssoj_out_"))
 
     def run_once() -> None:
         src = _events_stream(spark, staged)
@@ -989,18 +979,7 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("c_ts") <= F.col("p_ts")),
             "left_outer",
         ).select("purchase_id", "click_id", "user_id")
-
-        def persist(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            joined.writeStream.foreachBatch(persist)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        api.append_stream(joined, table, checkpoint_dir=ck).awaitTermination()
 
     run_once()  # drains the data; outer rows still held back by the watermark
     _link_or_copy(
@@ -1014,12 +993,11 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = -1
     for _ in range(4):
         run_once()
-        n = spark.read.parquet(out_dir).count()
+        n = table.read(spark).count()
         if n == prev:
             break
         prev = n
-    back = spark.read.parquet(out_dir)
-    return back.filter(F.col("purchase_id") >= 0)
+    return table.read(spark).filter(F.col("purchase_id") >= 0)
 
 
 @register(
@@ -1154,37 +1132,22 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches all 5 event types, so the sink sees 3 versions per type and
     the LAST version per type must equal the full-table counts — which is
     also what distinguishes update (overwrites keyed rows downstream)
-    from append (immutable rows) at the consumer."""
+    from append (immutable rows) at the consumer. The consumer is
+    api.upsert_stream keyed by event_type, so the table holds the latest
+    row per type."""
+    from dicebox_sensorybatchprocessor_spark import api, lake
+
     spark = _streaming_session(spark)
     raw = _events_raw(spark, sf_dir)
     parts = [raw.filter(F.col("event_id") % 3 == i) for i in range(3)]
     staged = _stage_files(spark, parts, "updmode", cache_key=sf_dir)
     stream = _events_stream(spark, staged, max_files=1)
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n_events"))
-    qname = f"upd_{uuid.uuid4().hex[:8]}"
-    ck = scratch_dir(prefix="sbp_ck_upd_")
-    out_dir = scratch_dir(prefix="sbp_upd_out_")
-
-    def persist(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(out_dir)
-
-    q = (
-        agg.writeStream.foreachBatch(persist)
-        .outputMode("update")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    back = spark.read.parquet(out_dir)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("event_type").orderBy(F.col("batch_id").desc())
-    return (
-        back.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_type", "n_events")
-    )
+    table = lake.ManifestTable(scratch_dir(prefix="sbp_upd_out_"))
+    api.upsert_stream(
+        agg, table, ("event_type",), checkpoint_dir=scratch_dir(prefix="sbp_ck_upd_")
+    ).awaitTermination()
+    return table.read(spark).select("event_type", "n_events")
 
 
 _LAKEMV_SUM = (

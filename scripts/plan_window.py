@@ -11,6 +11,13 @@ paste the tuple this script prints over the old one:
 
     python scripts/plan_window.py            # print the plan
     python scripts/plan_window.py --tuple    # ready-to-paste _DRIVER_WINDOW
+    python scripts/plan_window.py --cost path.py:function ...
+
+``--cost`` plans the window as if each named function were also edited
+(``path.py`` relative to the repo root or the package; ``Class.method``
+names a method): the names seed the same dirty-code fixpoint a real
+diff does. Run it before writing a change to learn its slot cost up
+front.
 
 Output sections:
   touched   — queries the rotation test will REQUIRE in the window
@@ -38,6 +45,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.test_window_rotation import (  # noqa: E402
     _round_boundary,
+    _top_level_bindings,
+    _top_level_functions,
     dirty_query_names,
     never_driver_checked,
 )
@@ -64,15 +73,37 @@ def last_green_rounds() -> dict[str, int]:
     return last
 
 
+def cost_seeds(targets: list[str]) -> set[tuple[str, str]]:
+    """``path.py:function`` targets as ``(rel, name)`` seeds of
+    :func:`dirty_query_names`."""
+    seeds = set()
+    for target in targets:
+        rel, _, name = target.partition(":")
+        if not os.path.exists(os.path.join(REPO, rel)):
+            rel = f"{PKG}/{rel}"
+        top = name.partition(".")[0]
+        if top not in _top_level_functions(rel) and top not in _top_level_bindings(rel):
+            raise SystemExit(f"--cost: no function {name!r} in {rel}")
+        seeds.add((rel, name))
+    return seeds
+
+
 def main() -> None:
     import importlib
+
+    targets = []
+    if "--cost" in sys.argv:
+        targets = [a for a in sys.argv[sys.argv.index("--cost") + 1 :] if not a.startswith("--")]
+    extra = cost_seeds(targets)
+    if targets:
+        print(f"# cost of editing {len(targets)} function(s): {' '.join(targets)}")
 
     eng = importlib.import_module(PKG)
     queries = eng.all_queries()
     window_n = eng.DRIVER_WINDOW
 
     boundary = _round_boundary()
-    required = dirty_query_names(boundary, queries) if boundary else {}
+    required = dirty_query_names(boundary, queries, extra) if boundary else {}
     for name in never_driver_checked(queries):
         required.setdefault(name, "never driver-checked (new query)")
     touched = [n for n in queries if n in required]

@@ -780,8 +780,10 @@ def test_quarantine_stream_routes_and_repairs(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ck"),
     )
     q.awaitTermination()
-    ok = {r.id for r in spark.read.parquet(ok_dir).collect()}
-    bad = {(r.id, r.label) for r in spark.read.parquet(bad_dir).collect()}
+    from dicebox_sensorybatchprocessor_spark import lake
+
+    ok = {r.id for r in lake.ManifestTable(ok_dir).read(spark).collect()}
+    bad = {(r.id, r.label) for r in lake.ManifestTable(bad_dir).read(spark).collect()}
     assert ok == {1, 4}
     assert bad == {(2, "_x"), (3, "b")}
 

@@ -201,18 +201,27 @@ def _package_files() -> list[str]:
     ]
 
 
-def dirty_query_names(boundary: str, queries) -> dict[str, str]:
+def dirty_query_names(boundary: str, queries, extra=()) -> dict[str, str]:
     """Registered query names whose backing code changed since
     ``boundary`` (value = human-readable reason), per the granularity
-    rules in the module docstring."""
+    rules in the module docstring. ``extra`` holds hypothetical edits
+    ``(rel, name)``: a top-level function seeds as a changed function,
+    and ``Class.method`` seeds its class as a changed binding."""
     touched = _touched_files(boundary)
-    if not touched:
+    extra = {(rel, name) for rel, name in extra if rel not in _INFRA}
+    if not touched and not extra:
         return {}
 
     # -- seed dirt from diffs ------------------------------------------
     dirty: dict[tuple[str, str], str] = {}  # (rel, fn_name) -> reason
     dirty_bindings: set[str] = set()  # bare names matched as \bNAME\b
     module_wide: dict[str, str] = {}  # rel -> reason
+    for rel, name in extra:
+        top = name.partition(".")[0]
+        if top in _top_level_functions(rel):
+            dirty[(rel, top)] = f"{rel}:{top} edited"
+        else:
+            dirty_bindings.add(top)
     for rel in touched:
         fns = _top_level_functions(rel)
         binds = _top_level_bindings(rel)
@@ -339,3 +348,36 @@ def test_driver_window_is_the_one_tuple() -> None:
     assert len(set(window)) == len(window), "duplicate names in _DRIVER_WINDOW"
     assert set(window) <= set(queries), set(window) - set(queries)
     assert list(queries)[: eng.DRIVER_WINDOW] == list(window)
+
+
+def _planned_touched(*args: str) -> int:
+    """``touched`` from the summary line of scripts/plan_window.py."""
+    out = subprocess.run(
+        [sys.executable, str(REPO / "scripts" / "plan_window.py"), *args],
+        cwd=REPO, capture_output=True, text=True,
+    ).stdout
+    return int(re.search(r"touched=(\d+)", out).group(1))
+
+
+def test_plan_window_cost_of_no_edit_is_the_plain_plan() -> None:
+    assert _planned_touched("--cost") == _planned_touched()
+
+
+def test_plan_window_cost_counts_an_edited_query() -> None:
+    """Editing a clean query function that nothing else calls fronts
+    exactly its one registered query."""
+    boundary = _round_boundary()
+    if boundary is None:
+        pytest.skip("no round-boundary commit in history (fresh clone)")
+    queries = importlib.import_module(PKG).all_queries()
+    required = set(dirty_query_names(boundary, queries)) | never_driver_checked(queries)
+    sources = "\n".join((REPO / rel).read_text() for rel in _package_files())
+    fn_names = [spec.fn.__name__ for spec in queries.values()]
+    rel, fn = next(
+        (Path(sys.modules[spec.fn.__module__].__file__).relative_to(REPO), spec.fn.__name__)
+        for name, spec in queries.items()
+        if name not in required
+        and fn_names.count(spec.fn.__name__) == 1
+        and len(re.findall(rf"\b{spec.fn.__name__}\s*\(", sources)) == 1
+    )
+    assert _planned_touched("--cost", f"{rel}:{fn}") == _planned_touched() + 1
