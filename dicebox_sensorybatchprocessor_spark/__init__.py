@@ -54,8 +54,8 @@ _OPERATOR_MODULES = (
 # so _DRIVER_WINDOW is the verification budget. Regenerate it with
 # `python scripts/plan_window.py --tuple` and paste the output over it:
 # queries touched since the last `round N:` commit come first (the rotation
-# test requires them), then the oldest driver-green fill. 35 of the 50
-# slots are touched, so 15 remain for the next change.
+# test requires them), then the oldest driver-green fill. 47 of the 50
+# slots are touched, so 3 remain for the next change.
 DRIVER_WINDOW = 50
 
 _DRIVER_WINDOW = (
@@ -101,16 +101,16 @@ _DRIVER_WINDOW = (
     "stream_dedup_wm",
     "stream_join_outer",
     "stream_update_mode",
+    "sink_scan_orc",
+    "scan_schema_evolution",
+    "sink_range_partitioned",
+    "scan_csv_corrupt",
+    "sim_ann_ivf_persisted",
+    "sim_ann_ivfpq_persisted",
     # oldest driver-green fill
     "agg_approx_distinct",  # last green r10
     "join_skew_salted",  # last green r10
     "fn_string",  # last green r10
-    "fn_date",  # last green r10
-    "fn_math",  # last green r10
-    "fn_array_explode",  # last green r10
-    "fn_map",  # last green r10
-    "fn_json",  # last green r10
-    "fn_bitwise",  # last green r10
 )
 
 

@@ -15,7 +15,8 @@ protocol reduced to its load-bearing core:
 
     <root>/
       data/<writer-uuid>/part-*.parquet     immutable, staged by writers
-      _sbp_manifests/v000000000042.json     {"version", "base", "files"}
+      _sbp_manifests/v000000000042.json     {"version", "base", "fmt": 2, "ts",
+                                             "add", "remove", ...}
 
 * **Crash safety** — a writer that dies after staging data but before
   the manifest link leaves only invisible orphans; the previous
@@ -42,8 +43,12 @@ protocol reduced to its load-bearing core:
   a million-file table resolves in O(checkpoint + recent deltas), not
   O(full file list as JSON) per version; per-file zone-map stats are
   likewise collected only for ADDED files and carried forward.
-  Pre-round-10 self-contained manifests (a ``files`` key) still
-  resolve — the reader treats them as their own checkpoint. Each
+* **One format** — every manifest is format 2: ``fmt`` 2, the in-commit
+  publish instant ``ts``, and the recorded byte size of every file it
+  adds; every checkpoint has the ``size`` and ``blooms`` columns.
+  :meth:`ManifestTable._read_manifest_json`, the one manifest parser,
+  rejects anything else with a ``ValueError`` naming the version, so
+  no reader keeps a fallback for an older shape. Each
   manifest also carries the table ``schema`` its live files share (read
   from the added files' Spark footer key at commit, Delta's
   ``schemaString``), and per-file Bloom filters of a bucketed commit are
@@ -96,6 +101,13 @@ _PER_FILE_KEYS = (
     "fmt",
     "n_files",
 )
+# resolved per-file map -> the manifest key of its added files' entries
+_FILE_MAPS = {
+    "file_buckets": "add_buckets",
+    "file_stats": "add_stats",
+    "file_blooms": "add_blooms",
+    "file_sizes": "add_sizes",
+}
 # footer key under which Spark records a data file's schema as JSON — the
 # key Spark's own parquet schema inference reads
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -313,17 +325,8 @@ def _zorder_key(df: DataFrame, cols: tuple[str, ...], bits: int = 8):
     return z.cast("long")
 
 
-def _mtime_or_none(path: str) -> float | None:
-    """mtime, or None when the file vanished (a concurrently vacuumed
-    manifest) — history()'s legacy-timestamp fallback must not crash a
-    reader mid-race."""
-    try:
-        return os.path.getmtime(path)
-    except OSError:
-        return None
-
-
-def _fsync_dir(path: str) -> None:
+def _fsync(path: str) -> None:
+    """fsync ``path``: a file's bytes, or a directory's entries."""
     fd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(fd)
@@ -364,39 +367,51 @@ class ManifestTable:
         )
 
     def _read_manifest_json(self, version: int) -> dict:
+        """The one parse of a manifest. Only format 2 (``fmt`` 2 with an
+        in-commit ``ts``) is a manifest; anything else raises."""
         with open(self._manifest_path(version)) as fh:
-            return json.load(fh)
+            m = json.load(fh)
+        if m.get("fmt") != 2 or "ts" not in m:
+            raise ValueError(
+                f"{self.root}: manifest v{version} is not format 2 "
+                f"(fmt={m.get('fmt')!r}, ts {'set' if 'ts' in m else 'missing'})"
+            )
+        return m
+
+    def _versions(self) -> list[int]:
+        """Every published version: the ``v*.json`` names of the
+        manifest dir. Torn or in-flight manifests are invisible by
+        construction (only the atomic link creates those names)."""
+        out = []
+        for name in os.listdir(os.path.join(self.root, _MANIFEST_DIR)):
+            if name.startswith("v") and name.endswith(".json"):
+                try:
+                    out.append(int(name[1 : 1 + _V_DIGITS]))
+                except ValueError:
+                    continue  # stray non-canonical file
+        return out
 
     def _write_checkpoint(self, version: int, snap: dict) -> None:
         """Materialize the resolved state at ``version`` as one parquet
-        file (path, bucket, stats-JSON per live file). Deterministic
+        file (path, size, bucket, stats and blooms JSON per live file). Deterministic
         content — racing writers of the same version produce identical
         bytes, so a plain atomic replace suffices."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         files = snap["files"]
-        fb = snap.get("file_buckets", {})
-        fs = snap.get("file_stats", {})
-        fbl = snap.get("file_blooms", {})
-        fsz = snap.get("file_sizes", {})
+
+        def column(key: str, encode, typ):
+            m = snap.get(key, {})
+            return pa.array([encode(m[f]) if f in m else None for f in files], type=typ)
+
         table = pa.table(
             {
                 "path": pa.array(files, type=pa.string()),
-                "size": pa.array(
-                    [fsz.get(f) for f in files], type=pa.int64()
-                ),
-                "bucket": pa.array(
-                    [fb.get(f) for f in files], type=pa.int64()
-                ),
-                "stats": pa.array(
-                    [json.dumps(fs[f]) if f in fs else None for f in files],
-                    type=pa.string(),
-                ),
-                "blooms": pa.array(
-                    [json.dumps(fbl[f]) if f in fbl else None for f in files],
-                    type=pa.string(),
-                ),
+                "size": column("file_sizes", int, pa.int64()),
+                "bucket": column("file_buckets", int, pa.int64()),
+                "stats": column("file_stats", json.dumps, pa.string()),
+                "blooms": column("file_blooms", json.dumps, pa.string()),
             }
         )
         final = self._ckpt_path(version)
@@ -406,151 +421,74 @@ class ManifestTable:
         # crash could leave a PRESENT-but-torn checkpoint — readers do
         # fall back to the delta chain on a bad checkpoint, but vacuum
         # deletes that chain past the pinned version
-        fd = os.open(tmp, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
+        _fsync(tmp)
         os.replace(tmp, final)
-        _fsync_dir(os.path.dirname(final))
+        _fsync(os.path.dirname(final))
 
     def _read_checkpoint(self, version: int) -> dict:
         """Full per-file state at a checkpointed version — columnar read,
         no JSON parse of the file list."""
         import pyarrow.parquet as pq
 
-        t = pq.read_table(self._ckpt_path(version))
-        files = t.column("path").to_pylist()
-        buckets = t.column("bucket").to_pylist()
-        stats = t.column("stats").to_pylist()
-        blooms = (
-            t.column("blooms").to_pylist()
-            if "blooms" in t.schema.names
-            else [None] * len(files)
-        )
-        sizes = (
-            t.column("size").to_pylist()
-            if "size" in t.schema.names
-            else [None] * len(files)
-        )
+        t = pq.read_table(self._ckpt_path(version)).to_pydict()
+        files = t["path"]
+
+        def per_file(col: str, parse) -> dict:
+            return {f: parse(x) for f, x in zip(files, t[col]) if x is not None}
+
         return {
             "files": files,
-            "file_buckets": {
-                f: int(b) for f, b in zip(files, buckets) if b is not None
-            },
-            "file_stats": {
-                f: json.loads(s) for f, s in zip(files, stats) if s is not None
-            },
-            "file_blooms": {
-                f: json.loads(s) for f, s in zip(files, blooms) if s is not None
-            },
-            "file_sizes": {
-                f: int(s) for f, s in zip(files, sizes) if s is not None
-            },
+            "file_buckets": per_file("bucket", int),
+            "file_stats": per_file("stats", json.loads),
+            "file_blooms": per_file("blooms", json.loads),
+            "file_sizes": per_file("size", int),
         }
 
     def _resolve(self, v: int) -> dict:
         """Resolve version ``v`` to a full snapshot dict (files +
-        per-file maps + metadata). Legacy self-contained manifests (a
-        ``files`` key) return as-is; v2 delta manifests replay from the
-        nearest checkpoint or legacy base — at most ``_CKPT_EVERY``
-        O(delta) JSON reads plus one columnar checkpoint read."""
+        per-file maps + metadata): the nearest readable checkpoint at or
+        below ``v`` plus the delta manifests above it — at most
+        ``_CKPT_EVERY`` O(delta) JSON reads and one columnar checkpoint
+        read. A torn checkpoint is skipped for the delta chain below it."""
         m = self._read_manifest_json(v)
-        if "files" in m:
-            return m
-        if os.path.exists(self._ckpt_path(v)):
-            # checkpointed at v itself (vacuum pins the oldest retained
-            # version this way): the checkpoint already includes v's delta
-            try:
-                state = self._read_checkpoint(v)
-            except Exception:
-                state = None  # torn/unreadable: try the delta chain below
-        else:
-            state = None
-        if state is not None:
-            out0 = {k: val for k, val in m.items() if k not in _PER_FILE_KEYS}
-            out0["files"] = list(state["files"])
-            if out0.get("n_buckets"):
-                out0["file_buckets"] = state["file_buckets"]
-            if out0.get("stat_cols"):
-                out0["file_stats"] = state["file_stats"]
-            if out0.get("bloom_cols"):
-                out0["file_blooms"] = state["file_blooms"]
-            if state.get("file_sizes"):
-                out0["file_sizes"] = state["file_sizes"]
-            return out0
-        chain = [m]
-        state = None
-        base = m["base"]
-        while base > 0:
-            if os.path.exists(self._ckpt_path(base)):
+        chain, state, cur = [], None, v
+        while cur > 0:
+            if os.path.exists(self._ckpt_path(cur)):
                 try:
-                    state = self._read_checkpoint(base)
+                    state = self._read_checkpoint(cur)
                     break
                 except Exception:
                     pass  # torn checkpoint: keep walking the delta chain
-            mb = self._read_manifest_json(base)
-            if "files" in mb:
-                state = {
-                    "files": list(mb["files"]),
-                    "file_buckets": dict(mb.get("file_buckets", {})),
-                    "file_stats": dict(mb.get("file_stats", {})),
-                    "file_blooms": dict(mb.get("file_blooms", {})),
-                    "file_sizes": dict(mb.get("file_sizes", {})),
-                }
-                break
-            chain.append(mb)
-            base = mb["base"]
-        if state is None:
-            state = {
-                "files": [],
-                "file_buckets": {},
-                "file_stats": {},
-                "file_blooms": {},
-                "file_sizes": {},
-            }
+            d = m if cur == v else self._read_manifest_json(cur)
+            chain.append(d)
+            cur = d["base"]
+        state = state or {"files": []}
         files: dict[str, None] = dict.fromkeys(state["files"])
-        fb = dict(state["file_buckets"])
-        fs = dict(state["file_stats"])
-        fbl = dict(state.get("file_blooms", {}))
-        fsz = dict(state.get("file_sizes", {}))
+        maps = {k: dict(state.get(k, {})) for k in _FILE_MAPS}
         for d in reversed(chain):
-            for f in d.get("remove", ()):
+            for f in d["remove"]:
                 files.pop(f, None)
-                fb.pop(f, None)
-                fs.pop(f, None)
-                fbl.pop(f, None)
-                fsz.pop(f, None)
-            for f in d.get("add", ()):
-                files[f] = None
-            fb.update(d.get("add_buckets", {}))
-            fs.update(d.get("add_stats", {}))
-            fbl.update(d.get("add_blooms", {}))
-            fsz.update(d.get("add_sizes", {}))
+                for per_file in maps.values():
+                    per_file.pop(f, None)
+            files.update(dict.fromkeys(d["add"]))
+            for k, add_key in _FILE_MAPS.items():
+                maps[k].update(d.get(add_key, {}))
         out = {k: val for k, val in m.items() if k not in _PER_FILE_KEYS}
         out["files"] = list(files)
-        if out.get("n_buckets"):
-            out["file_buckets"] = {f: fb[f] for f in files if f in fb}
-        if out.get("stat_cols"):
-            out["file_stats"] = {f: fs[f] for f in files if f in fs}
-        if out.get("bloom_cols"):
-            out["file_blooms"] = {f: fbl[f] for f in files if f in fbl}
-        if fsz:
-            out["file_sizes"] = {f: fsz[f] for f in files if f in fsz}
+        # a per-file map rides only while its metadata does; sizes always
+        for k, kept in (
+            ("file_buckets", out.get("n_buckets")),
+            ("file_stats", out.get("stat_cols")),
+            ("file_blooms", out.get("bloom_cols")),
+            ("file_sizes", True),
+        ):
+            if kept:
+                out[k] = {f: maps[k][f] for f in files if f in maps[k]}
         return out
 
     def latest_version(self) -> int:
-        """Newest committed version, 0 if the table is empty. Torn or
-        in-flight manifests are invisible by construction (only the
-        atomic link creates ``v*.json`` names)."""
-        best = 0
-        for name in os.listdir(os.path.join(self.root, _MANIFEST_DIR)):
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    best = max(best, int(name[1 : 1 + _V_DIGITS]))
-                except ValueError:
-                    continue
-        return best
+        """Newest committed version, 0 if the table is empty."""
+        return max(self._versions(), default=0)
 
     def snapshot(self, version: int | None = None) -> dict:
         v = self.latest_version() if version is None else version
@@ -582,12 +520,13 @@ class ManifestTable:
         Delta's timestamp travel. The publish instant is the ``ts`` the
         manifest itself records at commit time (ADVICE r10: in-commit
         timestamps survive rsync/backup-restore, which resets the mtimes
-        a directory-listing approach would read); legacy manifests
-        without ``ts`` fall back to file mtime. Versions are published
+        a directory-listing approach would read). Versions are published
         in order, so the scan is one directory listing plus one tiny
-        delta-sized JSON per retained manifest. Raises if the timestamp
-        predates the oldest RETAINED version (vacuum expired the
-        history) or the table is empty."""
+        delta-sized JSON per retained manifest; a manifest vacuumed
+        between the listing and its read is skipped. Raises if the
+        timestamp predates the oldest RETAINED version (vacuum expired
+        the history), if the table is empty, or if a manifest is not
+        format 2."""
         import datetime
 
         ts = (
@@ -595,15 +534,8 @@ class ManifestTable:
             if isinstance(timestamp, str)
             else float(timestamp)
         )
-        mdir = os.path.join(self.root, _MANIFEST_DIR)
         best, oldest = 0, None
-        for name in os.listdir(mdir):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            try:
-                v = int(name[1 : 1 + _V_DIGITS])
-            except ValueError:
-                continue
+        for v in self._versions():
             # manifests are immutable once committed, so the publish ts
             # caches per (table handle, version): repeated time travel
             # pays one full-JSON parse per retained version per process,
@@ -611,33 +543,17 @@ class ManifestTable:
             # stats/bloom deltas, so the parse is not tiny on wide
             # commits; a ts sidecar/filename stamp is the structural fix
             # if retained-version counts ever grow past local scales)
-            if v in self._ts_cache:
-                oldest = (
-                    self._ts_cache[v]
-                    if oldest is None
-                    else min(oldest, self._ts_cache[v])
-                )
-                if self._ts_cache[v] <= ts:
-                    best = max(best, v)
-                continue
-            try:
-                mtime = float(self._read_manifest_json(v)["ts"])
-            except (KeyError, ValueError, json.JSONDecodeError):
+            if v not in self._ts_cache:
                 try:
-                    mtime = os.path.getmtime(os.path.join(mdir, name))
+                    self._ts_cache[v] = float(self._read_manifest_json(v)["ts"])
                 except OSError:
-                    # vanished between listing and stat: concurrently
-                    # vacuumed, so no longer retained — skip (r11
-                    # reader-race matrix)
+                    # vanished between listing and read: concurrently
+                    # vacuumed, so no longer retained (r11 reader-race
+                    # matrix)
                     continue
-            except OSError:
-                continue  # manifest vanished mid-scan: same as above
-            else:
-                # only in-commit timestamps cache: an mtime fallback for
-                # a legacy manifest is filesystem state, not content
-                self._ts_cache[v] = mtime
-            oldest = mtime if oldest is None else min(oldest, mtime)
-            if mtime <= ts:
+            published = self._ts_cache[v]
+            oldest = published if oldest is None else min(oldest, published)
+            if published <= ts:
                 best = max(best, v)
         if best == 0:
             raise ValueError(
@@ -848,6 +764,12 @@ class ManifestTable:
             if f.endswith(".parquet")
         )
 
+    def _num_rows(self, rel: str) -> int:
+        """Row count from a data file's parquet footer (no Spark job)."""
+        import pyarrow.parquet as pq
+
+        return pq.read_metadata(os.path.join(self.root, rel)).num_rows
+
     def _publish(self, tmp: str, final: str) -> None:
         """Atomic put-if-absent of a fully-written manifest. POSIX
         ``link`` fails with EEXIST if another writer won the version —
@@ -858,7 +780,7 @@ class ManifestTable:
             raise CommitConflict(os.path.basename(final)) from exc
         finally:
             os.unlink(tmp)
-        _fsync_dir(os.path.dirname(final))
+        _fsync(os.path.dirname(final))
 
     def txn_version(self, app_id: str, version: int | None = None) -> int:
         """Highest transaction id committed under ``app_id`` as of the
@@ -932,8 +854,9 @@ class ManifestTable:
 
         STORAGE is delta-encoded (round 10): the JSON names only the
         files this commit added/removed relative to ``base_version``
-        (plus the full small metadata); per-file buckets and zone-map
-        stats ride only for the ADDED files, with stats collected
+        (plus the full small metadata); per-file buckets, byte sizes and
+        zone-map stats ride only for the ADDED files (a named file that
+        does not exist raises before anything publishes), with stats collected
         incrementally — carried files keep the stats their adding commit
         recorded, so commit cost is O(delta), never O(table). Every
         ``_CKPT_EVERY`` versions a parquet checkpoint snapshots the full
@@ -954,11 +877,15 @@ class ManifestTable:
             # in-commit publish instant (ADVICE r10): mtime-based
             # timestamp travel breaks the moment the table directory is
             # rsync'd/restored (mtimes reset); the manifest's own record
-            # survives any copy. version_at prefers it, mtime is the
-            # legacy fallback.
+            # survives any copy, and version_at travels by it alone.
             "ts": time.time(),
             "add": [f for f in files if f not in base_set],
             "remove": [f for f in base_files if f not in file_set],
+        }
+        # every added file's size; a file that is not there raises here,
+        # before anything is published
+        manifest["add_sizes"] = {
+            f: os.path.getsize(os.path.join(self.root, f)) for f in manifest["add"]
         }
         txns = dict(base_snap.get("txns", {}))
         if txn is not None:
@@ -1019,13 +946,6 @@ class ManifestTable:
                     max_bits=mb,
                     parents=_bloom_parents(manifest, base_snap, base_blooms),
                 )
-        add_sizes = {}
-        for f in manifest["add"]:
-            p = os.path.join(self.root, f)
-            if os.path.exists(p):
-                add_sizes[f] = os.path.getsize(p)
-        if add_sizes:
-            manifest["add_sizes"] = add_sizes
         schema = self._commit_schema(
             manifest["add"], len(files) - len(manifest["add"]), base_snap
         )
@@ -1071,7 +991,11 @@ class ManifestTable:
         the snapshot's shape: a bucketed table through
         :meth:`stage_bucketed`, its kept files keeping their buckets; an
         unbucketed one given ``n_buckets`` is bucketed by ``key_cols``;
-        otherwise ``stage(n_files)``. The commit carries the snapshot's
+        otherwise ``stage(n_files)``. There a 0-row file lives only as an
+        empty table's one schema-bearing file: staged 0-row files are
+        dropped when the new snapshot holds another file (an empty
+        micro-batch still publishes its ``txn``, with no file), and the
+        schema file goes once rows arrive. The commit carries the snapshot's
         stat columns (``stat_cols`` where it has none), and ``commit_kw``
         override any commit() argument. A :class:`CommitConflict`
         re-plans against the new snapshot, up to ``max_retries``
@@ -1103,6 +1027,13 @@ class ManifestTable:
                 )
             else:
                 added = self.stage(plan.rows, n_files=plan.n_files)
+                nonempty = [f for f in added if self._num_rows(f)]
+                if nonempty and len(keep) == 1 and not self._num_rows(keep[0]):
+                    keep = []  # an empty table's schema file, now superseded
+                if keep or nonempty:
+                    # a 0-row file adds nothing but a footer; an otherwise
+                    # empty snapshot keeps one for the schema it carries
+                    added = nonempty
             kw.update(commit_kw or {})
             try:
                 version = self.commit(keep + added, snap["version"], txn=txn, **kw)
@@ -1368,104 +1299,86 @@ class ManifestTable:
         without a secondary index."""
         from pyspark.sql import functions as F
 
-        # resolve the version ONCE (ADVICE r10): three independent
-        # `version=None` resolutions could straddle a concurrent commit —
-        # intersecting version-N bloom survivors with version-N+1's file
-        # list silently drops N+1's added files from an exact method
-        if version is None:
-            version = self.latest_version()
-        files = set(self.prune_files_point(col, value, version))
-        snap = self.snapshot(version)
-        if col in (snap.get("stat_cols") or ()):
-            files &= set(self.prune_files(col, value, value, version))
-        files = [f for f in snap["files"] if f in files]
-        if not files:
-            return self.read(spark, version).filter(F.lit(False))
-        return self._scan(spark, files, version).filter(F.col(col) == F.lit(value))
+        def keep(v: int) -> list[str]:
+            maybe = set(self.prune_files_point(col, value, v))
+            return [f for f in self.prune_files(col, value, value, v) if f in maybe]
+
+        return self._read_pruned(spark, keep, F.col(col) == F.lit(value), version)
 
     def prune_files(
         self, col: str, lo, hi, version: int | None = None
     ) -> list[str]:
         """Root-relative data files of the snapshot whose [min, max] for
-        ``col`` intersects [lo, hi] (None = unbounded). Files without
-        recorded stats for ``col`` are kept — skipping must never drop a
-        row. :meth:`read_range` scans the kept files and applies the
-        real filter on top: the stats only choose which footers Spark
-        ever opens."""
-        snap = self.snapshot(version)
-        stats = snap.get("file_stats", {})
-        kept = []
-        for rel in snap["files"]:
-            rng = stats.get(rel, {}).get(col)
-            if rng is None:
-                kept.append(rel)
-                continue
-            fmin, fmax = rng
-            if (hi is not None and fmin > hi) or (lo is not None and fmax < lo):
-                continue
-            kept.append(rel)
-        return kept
+        ``col`` intersects [lo, hi] (None = unbounded); see
+        :meth:`prune_files_box`."""
+        return self.prune_files_box({col: (lo, hi)}, version)
 
     def read_range(
         self, spark: SparkSession, col: str, lo, hi, version: int | None = None
     ) -> DataFrame:
-        """Range scan served by manifest zone maps: only files whose
-        ``col`` stats intersect [lo, hi] are handed to Spark (the others
-        are never opened — no footer read, no task), then the exact
-        filter applies on top. Equal to ``read().filter(...)`` by
-        construction; cheaper by the skipped files."""
-        from pyspark.sql import functions as F
-
-        if version is None:
-            version = self.latest_version()
-        files = self.prune_files(col, lo, hi, version)
-        if not files:
-            return self.read(spark, version).filter(F.lit(False))
-        df = self._scan(spark, files, version)
-        if lo is not None:
-            df = df.filter(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.filter(F.col(col) <= F.lit(hi))
-        return df
+        """Range scan served by manifest zone maps: ``read_box`` over
+        the one predicate ``col`` in [lo, hi]."""
+        return self.read_box(spark, {col: (lo, hi)}, version)
 
     def prune_files_box(
         self, preds: dict[str, tuple], version: int | None = None
     ) -> list[str]:
         """Files whose zone maps intersect EVERY [lo, hi] in ``preds``
         ({col: (lo, hi)}, None = unbounded) — conjunctive multi-column
-        skipping. On a z-ordered table each file owns a hyper-rectangle,
+        skipping, over ONE resolution of the snapshot. Files without
+        recorded stats for a column are kept — skipping must never drop
+        a row. On a z-ordered table each file owns a hyper-rectangle,
         so the per-column intersections each discard files and the
         conjunction compounds; on a linearly-clustered table only the
         leading column's predicate skips anything."""
-        kept = self.snapshot(version)["files"]
-        for col, (lo, hi) in preds.items():
-            pruned = set(self.prune_files(col, lo, hi, version))
-            kept = [f for f in kept if f in pruned]
-        return kept
+        snap = self.snapshot(version)
+        stats = snap.get("file_stats", {})
+
+        def overlaps(rel: str) -> bool:
+            for col, (lo, hi) in preds.items():
+                rng = stats.get(rel, {}).get(col)
+                if rng is not None and (
+                    (hi is not None and rng[0] > hi) or (lo is not None and rng[1] < lo)
+                ):
+                    return False
+            return True
+
+        return [f for f in snap["files"] if overlaps(f)]
 
     def read_box(
         self, spark: SparkSession, preds: dict[str, tuple], version: int | None = None
     ) -> DataFrame:
         """Multi-column range scan served by zone maps: only files whose
-        stats intersect every predicate are opened, then the exact
-        filters apply on top. Equal to ``read().filter(...)`` by
-        construction; cheaper by the skipped files."""
+        stats intersect every predicate are opened (no footer read, no
+        task for the others), then the exact filters apply on top. Equal
+        to ``read().filter(...)`` by construction; cheaper by the
+        skipped files."""
+        from pyspark.sql import functions as F
+
+        cond = F.lit(True)
+        for col, (lo, hi) in preds.items():
+            if lo is not None:
+                cond = cond & (F.col(col) >= F.lit(lo))
+            if hi is not None:
+                cond = cond & (F.col(col) <= F.lit(hi))
+        return self._read_pruned(
+            spark, lambda v: self.prune_files_box(preds, v), cond, version
+        )
+
+    def _read_pruned(self, spark: SparkSession, keep, cond, version: int | None):
+        """The one pruned scan behind the point, range and box reads:
+        resolve ``version`` ONCE (ADVICE r10: independent ``None``
+        resolutions could straddle a concurrent commit and drop its
+        files), scan the files ``keep(version)`` returns — the empty
+        read when none survives — and apply the exact filter ``cond``."""
         from pyspark.sql import functions as F
 
         if version is None:
             version = self.latest_version()
-        files = self.prune_files_box(preds, version)
-        base = (
-            self._scan(spark, files, version)
-            if files
-            else self.read(spark, version).filter(F.lit(False))
-        )
-        for col, (lo, hi) in preds.items():
-            if lo is not None:
-                base = base.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                base = base.filter(F.col(col) <= F.lit(hi))
-        return base
+        files = keep(version)
+        if not files:
+            return self.read(spark, version).filter(F.lit(False))
+        return self._scan(spark, files, version).filter(cond)
 
     def changes(
         self,
@@ -1501,19 +1414,12 @@ class ManifestTable:
 
     # -- maintenance ----------------------------------------------------
     def _file_sizes(self, snap: dict) -> dict[str, int]:
-        """{relative path: bytes} for the snapshot — served from the
-        manifest's per-file sizes (recorded at commit, one stat per
-        ADDED file ever) with a getsize fallback for files committed
-        before round 10. At millions of files this is what keeps
+        """{relative path: bytes} for the snapshot — the sizes its
+        manifests recorded at commit (one stat per ADDED file ever,
+        never a stat at read). At millions of files this is what keeps
         ``optimize``'s decision a manifest read instead of millions of
         filesystem stat calls."""
-        known = snap.get("file_sizes", {})
-        return {
-            f: known[f]
-            if f in known
-            else os.path.getsize(os.path.join(self.root, f))
-            for f in snap["files"]
-        }
+        return snap.get("file_sizes", {})
 
     def file_stats(self, version: int | None = None) -> tuple[int, int]:
         """(file count, total bytes) of the snapshot's data files — from
@@ -1524,23 +1430,16 @@ class ManifestTable:
 
     def history(self) -> list[dict]:
         """DESCRIBE HISTORY: one row per retained version, newest first —
-        version, base, file/add/remove counts, whether it is
-        checkpointed, and the small metadata (bucket shape, txn apps,
-        constraint names, mv watermark). Reads ONLY the per-version
-        metadata: an O(delta) JSON each for fmt-2 manifests, never a
+        version, base, file/add/remove counts, the in-commit publish
+        ``timestamp``, whether it is checkpointed, and the small metadata
+        (bucket shape, txn apps, constraint names, mv watermark). Reads
+        ONLY the per-version metadata: an O(delta) JSON each, never a
         checkpoint or a resolved file list, so inspecting a million-file
-        table's history stays manifest-sized."""
+        table's history stays manifest-sized. A manifest vacuumed
+        between the listing and its read is skipped; one that is not
+        format 2 raises."""
         out = []
-        mdir = os.path.join(self.root, _MANIFEST_DIR)
-        versions = []
-        for name in os.listdir(mdir):
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    versions.append(int(name[1 : 1 + _V_DIGITS]))
-                except ValueError:
-                    continue  # stray non-canonical file, same as listers
-        versions.sort(reverse=True)
-        for v in versions:
+        for v in sorted(self._versions(), reverse=True):
             try:
                 m = self._read_manifest_json(v)
             except OSError:
@@ -1549,22 +1448,14 @@ class ManifestTable:
                 # skip it, exactly as if the listing had run a moment
                 # later (reader-race matrix, r11).
                 continue
-            legacy = "files" in m
             out.append(
                 {
                     "version": v,
-                    "base": m.get("base", 0),
-                    "n_files": len(m["files"]) if legacy else m.get("n_files", 0),
-                    "n_added": len(m.get("add", m.get("files", []))),
-                    "n_removed": len(m.get("remove", ())),
-                    # in-commit publish instant where recorded (r11 —
-                    # survives rsync/restore); mtime fallback for legacy
-                    # manifests, None when even that is unavailable
-                    "timestamp": (
-                        float(m["ts"])
-                        if "ts" in m
-                        else _mtime_or_none(self._manifest_path(v))
-                    ),
+                    "base": m["base"],
+                    "n_files": m["n_files"],
+                    "n_added": len(m["add"]),
+                    "n_removed": len(m["remove"]),
+                    "timestamp": float(m["ts"]),
                     "checkpointed": os.path.exists(self._ckpt_path(v)),
                     "n_buckets": m.get("n_buckets"),
                     "txn_apps": sorted(m.get("txns", {})),
@@ -1753,11 +1644,11 @@ class ManifestTable:
         window fails explicitly at snapshot resolution instead of at
         scan time. Returns the number of data files removed.
 
-        ``dry_run=True`` is Delta's VACUUM DRY RUN: report how many data
-        files WOULD be reclaimed under these settings and touch NOTHING
-        — no manifest expiry, no checkpoint pin, no deletion, caches
-        intact. The safety verb to run before the first horizoned vacuum
-        on a table with live writers.
+        ``dry_run=True`` is Delta's VACUUM DRY RUN: count the data files
+        the same orphan walk WOULD reclaim under these settings and touch
+        NOTHING — no manifest expiry, no checkpoint pin, no deletion,
+        caches intact. The safety verb to run before the first horizoned
+        vacuum on a table with live writers.
 
         ``min_file_age_s`` is the concurrent-writer horizon (Delta's
         retention-duration mitigation): an in-flight writer's staged
@@ -1770,7 +1661,8 @@ class ManifestTable:
         it above the longest write job's duration on busier tables, and
         pass 0 EXPLICITLY only when every writer is known quiesced
         (stop-the-world maintenance that reclaims crash orphans
-        immediately)."""
+        immediately). A file that vanishes mid-walk (a concurrent vacuum
+        or writer) is skipped, not counted."""
         latest = self.latest_version()
         keep_versions = range(max(1, latest - retain_versions + 1), latest + 1)
         oldest_keep = keep_versions[0] if keep_versions else 0
@@ -1779,77 +1671,49 @@ class ManifestTable:
         # pin the oldest retained version with a checkpoint so it keeps
         # resolving once its ancestors' JSONs are gone
         snaps = {v: self.snapshot(v) for v in keep_versions}
-        if dry_run:
-            live = {
-                os.path.normpath(os.path.join(self.root, f))
-                for v in keep_versions
-                for f in snaps[v]["files"]
-            }
-            would = 0
-            now = time.time()
-            data_root = os.path.join(self.root, _DATA_DIR)
-            for dirpath, _dirs, names in os.walk(data_root):
-                for name in names:
-                    p = os.path.normpath(os.path.join(dirpath, name))
-                    if p not in live:
-                        try:
-                            young = (
-                                min_file_age_s > 0
-                                and now - os.path.getmtime(p) < min_file_age_s
-                            )
-                        except OSError:
-                            continue  # vanished mid-walk (concurrent writer)
-                        if not young:
-                            would += 1
-            return would
-        if (
-            oldest_keep
-            and "fmt" in self._read_manifest_json(oldest_keep)
-            and not os.path.exists(self._ckpt_path(oldest_keep))
-        ):
-            self._write_checkpoint(oldest_keep, snaps[oldest_keep])
-        for name in os.listdir(os.path.join(self.root, _MANIFEST_DIR)):
-            path = os.path.join(self.root, _MANIFEST_DIR, name)
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    v = int(name[1 : 1 + _V_DIGITS])
-                except ValueError:
-                    continue
-                if v not in keep_versions:
-                    os.remove(path)
-            elif name.startswith("ckpt_v") and name.endswith(".parquet"):
-                try:
-                    v = int(name[len("ckpt_v") : len("ckpt_v") + _V_DIGITS])
-                except ValueError:
-                    continue
-                if v < oldest_keep:
-                    os.remove(path)
-        self._snap_cache.clear()
-        self._ts_cache.clear()
         live = {
             os.path.normpath(os.path.join(self.root, f))
-            for v in keep_versions
-            for f in snaps[v]["files"]
+            for snap in snaps.values()
+            for f in snap["files"]
         }
+        if not dry_run:
+            if oldest_keep and not os.path.exists(self._ckpt_path(oldest_keep)):
+                self._write_checkpoint(oldest_keep, snaps[oldest_keep])
+            for v in self._versions():
+                if v not in keep_versions:
+                    os.remove(self._manifest_path(v))
+            mdir = os.path.join(self.root, _MANIFEST_DIR)
+            for name in os.listdir(mdir):
+                if name.startswith("ckpt_v") and name.endswith(".parquet"):
+                    try:
+                        v = int(name[len("ckpt_v") : len("ckpt_v") + _V_DIGITS])
+                    except ValueError:
+                        continue
+                    if v < oldest_keep:
+                        os.remove(os.path.join(mdir, name))
+            self._snap_cache.clear()
+            self._ts_cache.clear()
         removed = 0
         now = time.time()
         data_root = os.path.join(self.root, _DATA_DIR)
         for dirpath, _dirs, names in os.walk(data_root, topdown=False):
             for name in names:
                 p = os.path.normpath(os.path.join(dirpath, name))
-                if p not in live:
-                    try:
-                        if (
-                            min_file_age_s > 0
-                            and now - os.path.getmtime(p) < min_file_age_s
-                        ):
-                            continue  # possibly an in-flight writer's staging
+                if p in live:
+                    continue
+                try:
+                    if (
+                        min_file_age_s > 0
+                        and now - os.path.getmtime(p) < min_file_age_s
+                    ):
+                        continue  # possibly an in-flight writer's staging
+                    if not dry_run:
                         os.remove(p)
-                    except OSError:
-                        continue  # vanished mid-walk (concurrent vacuum/writer)
-                    removed += 1
+                except OSError:
+                    continue  # vanished mid-walk (concurrent vacuum/writer)
+                removed += 1
             try:
-                if dirpath != data_root and not os.listdir(dirpath):
+                if not dry_run and dirpath != data_root and not os.listdir(dirpath):
                     os.rmdir(dirpath)
             except OSError:
                 pass

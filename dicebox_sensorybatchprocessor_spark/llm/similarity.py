@@ -585,18 +585,18 @@ def sim_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from dicebox_sensorybatchprocessor_spark import api
-    from dicebox_sensorybatchprocessor_spark.utils import scratch_dir_cached
+    from dicebox_sensorybatchprocessor_spark.utils import scratch_stage
 
     n_cells, nprobe, topk = 16, 10, 5
     e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     qrow = e.orderBy("vec_id").select("vec_id", "embedding").first()
     qvec = [float(x) for x in qrow["embedding"]]
 
-    idx_root, fresh = scratch_dir_cached("sbp_ivf_idx_", cache_key=sf_dir)
-    idx_path = os.path.join(idx_root, "ivf")
     assigned, centers = api.ivf_index(e, vec_col="embedding", n_cells=n_cells, seed=42)
-    if fresh:
-        api.ivf_save(assigned, centers, idx_path)
+    with scratch_stage("sbp_ivf_idx_", cache_key=sf_dir) as (idx_root, fresh):
+        idx_path = os.path.join(idx_root, "ivf")
+        if fresh:
+            api.ivf_save(assigned, centers, idx_path)
     loaded_assigned, loaded_centers = api.ivf_load(spark, idx_path)
 
     def probe(a: DataFrame, c: list[list[float]]) -> set[tuple[int, float]]:
@@ -1108,7 +1108,7 @@ def sim_ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from dicebox_sensorybatchprocessor_spark import api
-    from dicebox_sensorybatchprocessor_spark.utils import scratch_dir_cached
+    from dicebox_sensorybatchprocessor_spark.utils import scratch_stage
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     qrow = e.orderBy("vec_id").select("vec_id", "embedding").first()
@@ -1119,10 +1119,10 @@ def sim_ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, vec_col="embedding", n_cells=16, n_segments=16, n_codes=32,
         seed=42, train_rows=2048, corpus_n=n,
     )
-    idx_root, fresh = scratch_dir_cached("sbp_ivfpq_idx_", cache_key=sf_dir)
-    idx_path = os.path.join(idx_root, "ivfpq")
-    if fresh:
-        api.ivfpq_save(codes.select("vec_id", "cell", "codes"), centers, books, idx_path)
+    with scratch_stage("sbp_ivfpq_idx_", cache_key=sf_dir) as (idx_root, fresh):
+        idx_path = os.path.join(idx_root, "ivfpq")
+        if fresh:
+            api.ivfpq_save(codes.select("vec_id", "cell", "codes"), centers, books, idx_path)
     l_codes, l_centers, l_books = api.ivfpq_load(spark, idx_path)
 
     shortlist = max(100, int(n * 0.05))

@@ -197,7 +197,6 @@ class MaterializedAgg:
         coalesce(repaired, previous) per group."""
         if not self._minmax:
             return merged
-        cols = sorted({col for _agg, col in self._minmax.values()})
         repair_aggs = []
         for name, (agg, col) in self._minmax.items():
             fn = F.min if agg == "min" else F.max
@@ -248,7 +247,6 @@ class MaterializedAgg:
         drop = [f"__r_{n}" for n in self._minmax]
         if old_state is not None:
             drop += [f"__p_{n}" for n in self._minmax]
-        _ = cols  # group-key clustering on these columns prunes the repair scan
         return merged.drop(*drop)
 
     def _full_state(self, spark: SparkSession, v_to: int) -> DataFrame:
@@ -298,9 +296,7 @@ class MaterializedAgg:
         compaction commit is the extreme case: plus+minus spans ~2× the
         table while recompute scans it once). Sizes are the ones the base
         manifest recorded at commit (``ManifestTable._file_sizes``, as
-        ``optimize`` reads them), so routing stats no data file; if a
-        file without a recorded size can't be statted, routing falls
-        back to the r10 file-count ratio.
+        ``optimize`` reads them), so routing stats no data file.
         ``mode='incremental'`` / ``mode='recompute'`` force a path."""
         if mode not in ("auto", "incremental", "recompute"):
             raise ValueError(f"unknown refresh mode {mode!r}")
@@ -322,9 +318,9 @@ class MaterializedAgg:
             )
             if v_from >= v_to:
                 return None
-            old_snap = self.base.snapshot(v_from) if v_from else None
+            old_snap = self.base.snapshot(v_from)
             new_snap = self.base.snapshot(v_to)
-            old_files = set(old_snap["files"]) if old_snap else set()
+            old_files = set(old_snap["files"])
             new_files = set(new_snap["files"])
             plus = sorted(new_files - old_files)
             minus = sorted(old_files - new_files)
@@ -337,34 +333,18 @@ class MaterializedAgg:
             old_state = (
                 self.table.read(spark, mv_snap["version"]) if mv_snap["files"] else None
             )
-            legacy_state = old_state is not None and any(
-                f"__c_{c}" not in old_state.columns for c in self._sum_cols
-            )
-            if mode == "auto" and not legacy_state:
-                try:
-                    new_sizes = self.base._file_sizes(new_snap)
-                    old_sizes = self.base._file_sizes(old_snap) if old_snap else {}
-                    delta_b = sum(new_sizes[f] for f in plus) + sum(
-                        old_sizes[f] for f in minus
-                    )
-                    table_b = sum(new_sizes.values())
-                    routed = _route_refresh(
-                        delta_b, table_b, recompute_ratio, small_table_bytes
-                    )
-                except OSError:
-                    # non-statable scheme: fall back to the file-count ratio
-                    routed = (
-                        "recompute"
-                        if len(plus) + len(minus)
-                        > recompute_ratio * max(1, len(new_files))
-                        else "incremental"
-                    )
+            if mode == "auto":
+                new_sizes = self.base._file_sizes(new_snap)
+                old_sizes = self.base._file_sizes(old_snap)
+                delta_b = sum(new_sizes[f] for f in plus) + sum(
+                    old_sizes[f] for f in minus
+                )
+                routed = _route_refresh(
+                    delta_b, sum(new_sizes.values()), recompute_ratio, small_table_bytes
+                )
             else:
                 routed = mode
-            recompute = (
-                routed == "recompute"
-                or legacy_state  # pre-counter state: one recompute migrates it
-            )
+            recompute = routed == "recompute"
             if recompute:
                 merged = self._full_state(spark, v_to)
                 plus, minus = sorted(new_files), []

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from dicebox_sensorybatchprocessor_spark.io import load
 from dicebox_sensorybatchprocessor_spark.registry import register
-from dicebox_sensorybatchprocessor_spark.utils import scratch_dir_cached
+from dicebox_sensorybatchprocessor_spark.utils import scratch_stage
 
 _TARGET_FILE_BYTES = 128 * 1024 * 1024  # the usual lake target file size
 
@@ -60,11 +60,11 @@ def maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Fragmented v1 committed once per (process, sf_dir); the compaction
     # commit below runs per invocation — that IS the operator under test.
-    tmp, fresh = scratch_dir_cached("sbp_compact_", cache_key=sf_dir)
-    table = lake.ManifestTable(os.path.join(tmp, "table"))
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    if fresh:
-        table.commit(table.stage(ev, n_files=64), base_version=0)
+    with scratch_stage("sbp_compact_", cache_key=sf_dir) as (tmp, fresh):
+        table = lake.ManifestTable(os.path.join(tmp, "table"))
+        if fresh:
+            table.commit(table.stage(ev, n_files=64), base_version=0)
     stats = api.compact_table(spark, table.root, _TARGET_FILE_BYTES)
     n_fragmented, _ = table.file_stats(version=1)
     factor = F.lit(1000000.0)

@@ -17,7 +17,6 @@ from dicebox_sensorybatchprocessor_spark.io import load
 from dicebox_sensorybatchprocessor_spark.registry import register
 from dicebox_sensorybatchprocessor_spark.utils import (
     scratch_dir,
-    scratch_dir_cached,
     scratch_stage,
 )
 
@@ -125,16 +124,16 @@ def sink_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection partitioned by l_returnflag, re-reads it, and aggregates;
     the oracle checks against the parquet source, so the round-trip must
     be value-exact including the double money columns."""
-    tmp, fresh = scratch_dir_cached("sbp_orc_", cache_key=sf_dir)
-    out = os.path.join(tmp, "lineitem_orc")
-    if fresh:  # stage once per (process, sf_dir) — deterministic content
-        (
-            load(spark, sf_dir, "lineitem")
-            .select("l_returnflag", "l_linestatus", "l_extendedprice")
-            .write.mode("overwrite")
-            .partitionBy("l_returnflag")
-            .orc(out)
-        )
+    with scratch_stage("sbp_orc_", cache_key=sf_dir) as (tmp, fresh):
+        out = os.path.join(tmp, "lineitem_orc")
+        if fresh:  # stage once per (process, sf_dir) — deterministic content
+            (
+                load(spark, sf_dir, "lineitem")
+                .select("l_returnflag", "l_linestatus", "l_extendedprice")
+                .write.mode("overwrite")
+                .partitionBy("l_returnflag")
+                .orc(out)
+            )
     back = spark.read.orc(out)
     factor = F.lit(100.0)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -170,23 +169,23 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the merged schema in a metastore instead — the read path
     exercised here is identical."""
     o = load(spark, sf_dir, "orders")
-    tmp, fresh = scratch_dir_cached("sbp_evo_", cache_key=sf_dir)
-    if fresh:  # stage once per (process, sf_dir) — deterministic content
-        v1 = o.filter(
-            (F.col("o_orderdate") >= F.expr("TIMESTAMP_NTZ '1997-01-01 00:00:00'"))
-            & (F.col("o_orderdate") < F.expr("TIMESTAMP_NTZ '1998-01-01 00:00:00'"))
-        ).select("o_orderkey", "o_totalprice", "o_orderdate")
-        v2 = o.filter(
-            (F.col("o_orderdate") >= F.expr("TIMESTAMP_NTZ '1998-01-01 00:00:00'"))
-            & (F.col("o_orderdate") < F.expr("TIMESTAMP_NTZ '1999-01-01 00:00:00'"))
-        ).select(
-            "o_orderkey",
-            "o_totalprice",
-            "o_orderdate",
-            F.col("o_orderpriority").alias("priority_v2"),
-        )
-        v1.write.mode("overwrite").parquet(os.path.join(tmp, "d=v1"))
-        v2.write.mode("overwrite").parquet(os.path.join(tmp, "d=v2"))
+    with scratch_stage("sbp_evo_", cache_key=sf_dir) as (tmp, fresh):
+        if fresh:  # stage once per (process, sf_dir) — deterministic content
+            v1 = o.filter(
+                (F.col("o_orderdate") >= F.expr("TIMESTAMP_NTZ '1997-01-01 00:00:00'"))
+                & (F.col("o_orderdate") < F.expr("TIMESTAMP_NTZ '1998-01-01 00:00:00'"))
+            ).select("o_orderkey", "o_totalprice", "o_orderdate")
+            v2 = o.filter(
+                (F.col("o_orderdate") >= F.expr("TIMESTAMP_NTZ '1998-01-01 00:00:00'"))
+                & (F.col("o_orderdate") < F.expr("TIMESTAMP_NTZ '1999-01-01 00:00:00'"))
+            ).select(
+                "o_orderkey",
+                "o_totalprice",
+                "o_orderdate",
+                F.col("o_orderpriority").alias("priority_v2"),
+            )
+            v1.write.mode("overwrite").parquet(os.path.join(tmp, "d=v1"))
+            v2.write.mode("overwrite").parquet(os.path.join(tmp, "d=v2"))
     back = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(tmp, "d=v1"), os.path.join(tmp, "d=v2")
     )
@@ -222,15 +221,15 @@ def sink_range_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, so boundaries cannot straddle files). That claim plus the
     row-count/min/max round-trip ride the value hash."""
     o = load(spark, sf_dir, "orders")
-    tmp, fresh = scratch_dir_cached("sbp_range_", cache_key=sf_dir)
-    out = os.path.join(tmp, "orders_by_date")
-    if fresh:  # stage once per (process, sf_dir) — deterministic content
-        (
-            o.repartitionByRange(8, "o_orderdate")
-            .sortWithinPartitions("o_orderdate")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
+    with scratch_stage("sbp_range_", cache_key=sf_dir) as (tmp, fresh):
+        out = os.path.join(tmp, "orders_by_date")
+        if fresh:  # stage once per (process, sf_dir) — deterministic content
+            (
+                o.repartitionByRange(8, "o_orderdate")
+                .sortWithinPartitions("o_orderdate")
+                .write.mode("overwrite")
+                .parquet(out)
+            )
     back = spark.read.parquet(out)
     per_file = (
         back.groupBy(F.input_file_name().alias("f"))
@@ -282,10 +281,10 @@ def scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = o.select(
         F.when(F.col("o_orderkey") % 100 == 7, line_bad).otherwise(line_good).alias("value")
     )
-    tmp, fresh = scratch_dir_cached("sbp_csv_corrupt_", cache_key=sf_dir)
-    src = os.path.join(tmp, "lines")
-    if fresh:  # stage once per (process, sf_dir) — deterministic content
-        lines.write.mode("overwrite").text(src)
+    with scratch_stage("sbp_csv_corrupt_", cache_key=sf_dir) as (tmp, fresh):
+        src = os.path.join(tmp, "lines")
+        if fresh:  # stage once per (process, sf_dir) — deterministic content
+            lines.write.mode("overwrite").text(src)
     back = (
         spark.read.schema(
             "o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, _corrupt_record STRING"

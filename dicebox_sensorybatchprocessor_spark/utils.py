@@ -70,22 +70,21 @@ def _scratch_base() -> str | None:
     return None
 
 
-def scratch_dir(prefix: str, cache_key: str | None = None) -> str:
+def scratch_dir(prefix: str) -> str:
     """``mkdtemp`` that is removed at process exit (ADVICE r3: one bench +
     correctness process runs each disk-materializing op several times, so
     un-reaped scratch dirs accumulate full table copies under /tmp).
-
-    With ``cache_key``, repeated calls return the same directory so pure
-    input staging is written once per (prefix, key) — use
-    :func:`scratch_dir_cached` to also learn whether the dir is fresh.
-    """
-    return scratch_dir_cached(prefix, cache_key)[0]
+    Input staging written once per (prefix, key) goes through
+    :func:`scratch_stage` instead."""
+    return scratch_dir_cached(prefix)[0]
 
 
 def scratch_dir_cached(prefix: str, cache_key: str | None = None) -> tuple[str, bool]:
-    """Like :func:`scratch_dir` but returns ``(path, fresh)`` — ``fresh``
-    False means a cached dir already staged by an earlier call, so the
-    caller can skip rewriting its contents."""
+    """A fresh :func:`scratch_dir`, or with ``cache_key`` the dir an
+    earlier call made for (prefix, key): returns ``(path, fresh)``, and
+    ``fresh`` False means an earlier call already staged it. Staging
+    code calls :func:`scratch_stage`, which un-caches a half-written
+    dir."""
     if cache_key is not None and (prefix, cache_key) in _SCRATCH_CACHE:
         path, _ = _SCRATCH_CACHE[(prefix, cache_key)]
         return path, False

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from dicebox_sensorybatchprocessor_spark import all_queries, get_session
 from dicebox_sensorybatchprocessor_spark.io import load
-from dicebox_sensorybatchprocessor_spark.utils import scratch_dir_cached
+from dicebox_sensorybatchprocessor_spark.utils import scratch_stage
 
 # decontaminate_* is deliberately NOT in the stress set: amplified copies
 # keep the original text but get fresh doc_ids, and bench membership is
@@ -65,35 +65,36 @@ OPS = (
 
 
 def _stage_amplified(spark, sf_dir: str, amp: int) -> str:
-    out, fresh = scratch_dir_cached("stress_curation_", cache_key=f"{sf_dir}|{amp}")
-    if fresh:
-        d = load(spark, sf_dir, "documents")
-        (
-            d.withColumn("rep", F.explode(F.array(*[F.lit(i) for i in range(amp)])))
-            .select(
-                (F.col("doc_id") * amp + F.col("rep")).alias("doc_id"),
-                "text",
-                "lang",
-                "source",
-                "n_chars",
+    reps = F.explode(F.array(*[F.lit(i) for i in range(amp)]))
+    with scratch_stage("stress_curation_", cache_key=f"{sf_dir}|{amp}") as (out, fresh):
+        if fresh:
+            (
+                load(spark, sf_dir, "documents")
+                .withColumn("rep", reps)
+                .select(
+                    (F.col("doc_id") * amp + F.col("rep")).alias("doc_id"),
+                    "text",
+                    "lang",
+                    "source",
+                    "n_chars",
+                )
+                .write.mode("overwrite")
+                .parquet(f"{out}/documents.parquet")
             )
-            .write.mode("overwrite")
-            .parquet(f"{out}/documents.parquet")
-        )
-        e = load(spark, sf_dir, "events")
-        (
-            e.withColumn("rep", F.explode(F.array(*[F.lit(i) for i in range(amp)])))
-            .select(
-                (F.col("event_id") * amp + F.col("rep")).alias("event_id"),
-                "ts",
-                "user_id",
-                "event_type",
-                "value",
-                "props",
+            (
+                load(spark, sf_dir, "events")
+                .withColumn("rep", reps)
+                .select(
+                    (F.col("event_id") * amp + F.col("rep")).alias("event_id"),
+                    "ts",
+                    "user_id",
+                    "event_type",
+                    "value",
+                    "props",
+                )
+                .write.mode("overwrite")
+                .parquet(f"{out}/events.parquet")
             )
-            .write.mode("overwrite")
-            .parquet(f"{out}/events.parquet")
-        )
     return out
 
 

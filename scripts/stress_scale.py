@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from dicebox_sensorybatchprocessor_spark import all_queries
 from dicebox_sensorybatchprocessor_spark.io import load
 from dicebox_sensorybatchprocessor_spark.session import ensure_engine_conf
-from dicebox_sensorybatchprocessor_spark.utils import scratch_dir_cached
+from dicebox_sensorybatchprocessor_spark.utils import scratch_stage
 
 OPS = (
     "dedup_minhash_banded",
@@ -162,10 +162,15 @@ def _stage_amplified(spark, sf_dir: str, amp: int) -> str:
     Documents keep their text plus a per-copy suffix token (near-dup
     clusters of size amp, fixed vocabulary + 'v<rep>' tail); embeddings
     keep their vectors (ANN cost scales with row count); lineitem gets
-    fresh composite keys so the lake build sees ×amp distinct rows."""
-    out, fresh = scratch_dir_cached("stress_scale_", cache_key=f"{sf_dir}|{amp}")
-    if not fresh:
-        return out
+    fresh composite keys so the lake build sees ×amp distinct rows. A
+    staging write that raises un-caches its half-written dir."""
+    with scratch_stage("stress_scale_", cache_key=f"{sf_dir}|{amp}") as (out, fresh):
+        if fresh:
+            _write_amplified(spark, sf_dir, amp, out)
+    return out
+
+
+def _write_amplified(spark, sf_dir: str, amp: int, out: str) -> None:
     reps = F.explode(F.array(*[F.lit(i) for i in range(amp)]))
     d = load(spark, sf_dir, "documents").withColumn("rep", reps)
     (
@@ -210,7 +215,6 @@ def _stage_amplified(spark, sf_dir: str, amp: int) -> str:
         .repartition(64).write.mode("overwrite")
         .parquet(f"{out}/events.parquet")
     )
-    return out
 
 
 def main() -> None:

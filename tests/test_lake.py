@@ -34,6 +34,16 @@ def _rows(df):
     return sorted((r.k, r.v) for r in df.collect())
 
 
+def _touch(t, files):
+    """Create empty stand-ins for ``files`` under ``t``'s root: a commit
+    records every added file's size, so the files it names must exist."""
+    for f in files:
+        p = os.path.join(t.root, f)
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        open(p, "wb").close()
+    return files
+
+
 def test_commit_and_read_roundtrip(spark, tmp_path):
     t = ManifestTable(str(tmp_path / "t"))
     v = t.commit(t.stage(_df(spark, [(1, "a"), (2, "b")])), base_version=0)
@@ -1040,9 +1050,9 @@ def test_manifest_scale_resolution_is_o_delta(spark, tmp_path, monkeypatch):
     t = ManifestTable(str(tmp_path / "t"))
     v = 0
     for c in range(25):
-        files = t.snapshot()["files"] + [
-            f"data/fake/{c:03d}_{i:04d}.parquet" for i in range(500)
-        ]
+        files = t.snapshot()["files"] + _touch(
+            t, [f"data/fake/{c:03d}_{i:04d}.parquet" for i in range(500)]
+        )
         v = t.commit(files, v)
     snap = t.snapshot()
     assert len(snap["files"]) == 12500
@@ -1496,7 +1506,7 @@ def test_manifest_resolution_matches_model_over_random_histories(tmp_path):
         for add, rem in steps:
             cur = (model[-1] | add) - rem
             model.append(cur)
-            files = [f"data/f{j:04d}.parquet" for j in sorted(cur)]
+            files = _touch(t, [f"data/f{j:04d}.parquet" for j in sorted(cur)])
             v = t.commit(files, v)
         # every version resolves to its model state (fresh reader: no cache)
         t2 = ManifestTable(str(root))
@@ -1596,7 +1606,7 @@ def test_torn_checkpoint_falls_back_and_commit_survives_ckpt_failure(
     t = ManifestTable(str(tmp_path / "t"))
     v = 0
     for c in range(12):
-        files = t.snapshot()["files"] + [f"data/fk{c:02d}.parquet"]
+        files = t.snapshot()["files"] + _touch(t, [f"data/fk{c:02d}.parquet"])
         v = t.commit(files, v)
     ck = t._ckpt_path(10)
     assert os.path.exists(ck)
@@ -1611,7 +1621,7 @@ def test_torn_checkpoint_falls_back_and_commit_survives_ckpt_failure(
 
     monkeypatch.setattr(ManifestTable, "_write_checkpoint", boom)
     for c in range(12, 20):
-        files = t2.snapshot()["files"] + [f"data/fk{c:02d}.parquet"]
+        files = t2.snapshot()["files"] + _touch(t2, [f"data/fk{c:02d}.parquet"])
         v = t2.commit(files, v)
     assert v == 20 and len(t2.snapshot()["files"]) == 20
     assert not os.path.exists(t2._ckpt_path(20))
@@ -1653,7 +1663,7 @@ def test_read_point_resolves_version_once(spark, tmp_path, monkeypatch):
 def test_version_at_uses_in_commit_timestamps_not_mtime(spark, tmp_path):
     """ADVICE r10: timestamp travel must survive an rsync/backup-restore
     that resets manifest mtimes. Publish instants are recorded INSIDE the
-    manifest at commit time; mtime is only the legacy fallback."""
+    manifest at commit time; a manifest without one is rejected."""
     import json as _json
     import time as _time
 
@@ -1678,16 +1688,15 @@ def test_version_at_uses_in_commit_timestamps_not_mtime(spark, tmp_path):
     with pytest.raises(ValueError):
         t2.version_at(between - 100)
 
-    # legacy manifests (no "ts" key) still resolve via mtime fallback
+    # a manifest without "ts" is not format 2: rejected, naming v1
     p = t._manifest_path(1)
     m = _json.load(open(p))
     del m["ts"]
     with open(p, "w") as fh:
         _json.dump(m, fh)
-    legacy_mtime = between - 50
-    os.utime(p, (legacy_mtime, legacy_mtime))
     t3 = ManifestTable(str(t.root))
-    assert t3.version_at(between) == 1
+    with pytest.raises(ValueError, match="v1 is not format 2"):
+        t3.version_at(between)
 
 
 def test_vacuum_default_horizon_protects_fresh_orphans(spark, tmp_path):
@@ -1922,7 +1931,7 @@ def test_history_carries_publish_timestamps(spark, tmp_path):
     stamps = [h["timestamp"] for h in hist]
     assert all(isinstance(x, float) and before <= x <= after for x in stamps)
     assert stamps == sorted(stamps, reverse=True)
-    # legacy manifest without 'ts': mtime fallback, never a crash
+    # a manifest without 'ts' is not format 2: rejected, naming v1
     import json as _json
 
     p = t._manifest_path(1)
@@ -1930,8 +1939,8 @@ def test_history_carries_publish_timestamps(spark, tmp_path):
     del m["ts"]
     with open(p, "w") as fh:
         _json.dump(m, fh)
-    hist2 = ManifestTable(str(t.root)).history()
-    assert isinstance(hist2[-1]["timestamp"], float)
+    with pytest.raises(ValueError, match="v1 is not format 2"):
+        ManifestTable(str(t.root)).history()
 
 
 def test_vacuum_survives_data_file_vanishing_mid_walk(spark, tmp_path, monkeypatch):

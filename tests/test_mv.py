@@ -313,9 +313,7 @@ def test_auto_route_reads_recorded_sizes_not_the_filesystem(
     spark, tmp_path, monkeypatch
 ):
     """auto mode routes on the sizes the base manifest recorded at
-    commit (as optimize does): a refresh stats no base data file. When
-    sizes cannot be had (a file neither recorded nor statable), it falls
-    back to the file-count ratio and the view stays exact."""
+    commit (as optimize does): a refresh stats no base data file."""
     import os
 
     t, mv = _mk(spark, tmp_path)
@@ -332,15 +330,6 @@ def test_auto_route_reads_recorded_sizes_not_the_filesystem(
     assert mv.refresh(spark, small_table_bytes=0)["mode"] == "incremental"
     base_data = os.path.join(t.root, "data")
     assert [p for p in calls if p.startswith(base_data)] == []
-
-    def unstatable(self, snap):
-        raise FileNotFoundError(snap["files"][0])
-
-    monkeypatch.setattr(ManifestTable, "_file_sizes", unstatable)
-    merge_upsert(t, _base_df(spark, [(6, "b", -1.0)]), ("k",))
-    # one rewritten bucket of four: under the 0.6 file-count ratio
-    assert mv.refresh(spark, small_table_bytes=0)["mode"] == "incremental"
-    assert _got(spark, mv) == _expected(spark, t)
 
 
 def test_refresh_router_is_right_at_both_scale_ends(spark, tmp_path):
@@ -491,35 +480,6 @@ def test_mv_matches_group_by_over_random_histories(spark, tmp_path):
         shutil.rmtree(base_root)
 
     run()
-
-
-def test_legacy_state_without_counters_migrates_via_recompute(spark, tmp_path):
-    """A state table persisted before the non-null counters existed
-    (no __c_<col> columns) must not crash the incremental merge: the
-    router detects it and routes ONE recompute refresh, after which the
-    state carries the counters and increments resume."""
-    t, mv = _mk(spark, tmp_path)
-    led0 = mv.refresh(spark)
-    assert led0["mode"] == "recompute"
-    # simulate a pre-round-10 state: rewrite it without the counters
-    st = mv.table.read(spark)
-    legacy = st.drop(*[c for c in st.columns if c.startswith("__c_")])
-    mv.table.commit(
-        mv.table.stage(legacy),
-        mv.table.snapshot()["version"],
-        bucket_meta={"mv_base_version": mv.refreshed_version()},
-    )
-    merge_upsert(t, _base_df(spark, [(3, "a", 77.0)]), ("k",))
-    # small_table_bytes=0 keeps the test in the byte-ratio regime (r12)
-    led1 = mv.refresh(spark, small_table_bytes=0)
-    assert led1["mode"] == "recompute"  # ...legacy state forces migration
-    assert _got(spark, mv) == _expected(spark, t)
-    merge_upsert(t, _base_df(spark, [(4, "b", -5.0)]), ("k",))
-    led2 = mv.refresh(spark, small_table_bytes=0)
-    assert led2["mode"] == "incremental"  # migrated: increments resume
-    assert _got(spark, mv) == _expected(spark, t)
-    # noop ledgers carry the mode key too (bench reads it unconditionally)
-    assert mv.refresh(spark)["mode"] == "noop"
 
 
 def test_refresh_retry_never_moves_the_view_backward(spark, tmp_path):
